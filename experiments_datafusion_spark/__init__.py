@@ -11,8 +11,7 @@ Layout:
     session.py    SparkSession factory (AQE, Arrow, UTC, tuned shuffle)
     io.py         parquet table loaders / temp-view registration
     generators.py seed-deterministic rebuilds of the reference's 4 workloads
-    operators/    sort, split, joins (as-of/range), dedup, similarity, text
-    functions/    reusable Column-expression builders (cosine, hashing, ...)
+    operators/    sort, split, joins (as-of/salted), dedup, similarity, text
     queries/      the operator registry: name -> (spark fn, oracle SQL)
     streaming/    Structured Streaming pipelines over the events table
     plans/        explain/plan-audit helpers

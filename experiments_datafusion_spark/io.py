@@ -5,6 +5,11 @@ The reference's only "source" is an in-memory seeded generator
 surface (DataFusion 19, Cargo.toml:10) reads parquet/csv/json and writes the
 same. Spark covers all of those natively — this module is thin plumbing plus
 the test-table loaders for /root/testdata/sf*/.
+
+Query code binds the DataFrames these loaders return into SQL as
+``spark.sql(text, name=df)`` arguments, which live for that one call;
+register_views is the one named-view path, for the SQL-frontend keys whose
+text reads the bare table names.
 """
 
 from __future__ import annotations
@@ -35,13 +40,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # paid it per table per window.  A production deployment reads schemas
 # from a catalog (metastore / table-format manifest), never re-infers per
 # query; this memo is that catalog: METADATA ONLY (column names/types,
-# no rows, no statistics, no results), keyed by the resolved file path,
-# populated by one real inference per process.  Every query still scans
-# the parquet data in full on every invocation.  The memo is only
-# consulted for the immutable /root/testdata fixtures' read path; callers
-# reading freshly written trees (snapshots, sinks) use spark.read
-# directly and always infer.
-_SCHEMA_MEMO: dict[str, object] = {}
+# no rows, no statistics, no results), keyed by the file path and
+# stamped with the file's (st_size, st_mtime_ns): a file rewritten in
+# place misses the stamp and is inferred again, so it is never read with
+# its old schema.  Every query still scans the parquet data in full on
+# every invocation.  Callers reading freshly written trees (snapshots,
+# sinks) use spark.read directly and always infer.
+_SCHEMA_MEMO: dict[str, tuple[tuple[int, int], object]] = {}
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -52,12 +57,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     long (nanosAsLong conf, set in session.RUNTIME_CONF) and we truncate to
     a microsecond timestamp — same truncation DuckDB applies."""
     path = f"{sf_dir}/{name}.parquet"
-    sch = _SCHEMA_MEMO.get(path)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[path] = df.schema
+    st = os.stat(path)
+    stamp = (st.st_size, st.st_mtime_ns)
+    memo = _SCHEMA_MEMO.get(path)
+    if memo is not None and memo[0] == stamp:
+        df = spark.read.schema(memo[1]).parquet(path)
     else:
-        df = spark.read.schema(sch).parquet(path)
+        df = spark.read.parquet(path)
+        _SCHEMA_MEMO[path] = (stamp, df.schema)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 
@@ -73,7 +80,8 @@ def load(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    """Register the test tables as temp views for the SQL frontend."""
+    """Register the test tables as temp views named after the tables, for
+    the SQL-frontend keys (their SQL text is also the DuckDB oracle's)."""
     for n in names:
         table(spark, sf_dir, n).createOrReplaceTempView(n)
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 import random
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 EMB_DIM = 64
 N_PLANES = 16  # LSH hyperplanes -> 16-bit bucket ids
@@ -97,22 +97,21 @@ def topk_bruteforce(
     set against the partitioned corpus, rank per query with a deterministic
     tiebreak on neighbor id.
 
-    Round 14: one spark.sql() program over views of the norm-attached
-    sides (same tree, one analysis pass).  The SQL higher-order functions
+    Round 14: one spark.sql() program over the norm-attached sides
+    (same tree, one analysis pass).  The SQL higher-order functions
     are the literal dialect twins of dotd()/_with_norm() — aggregate /
     zip_with with the identical lambdas, so the sequential double
     accumulation is bit-for-bit the same."""
-    spark = corpus.sparkSession
-    _with_norm(corpus).select(
+    c = _with_norm(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("c_emb"), "nrm"
-    ).createOrReplaceTempView("bf_corpus_v")
-    _with_norm(queries).select(
+    )
+    q = _with_norm(queries).select(
         F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
-    ).createOrReplaceTempView("bf_queries_v")
+    )
     dot = ("aggregate(zip_with(q_emb, c_emb, (x, y) -> x * y),"
            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
-    return spark.sql(f"""
+    return corpus.sparkSession.sql(f"""
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
        round(cos_raw, 4) AS cosine
 FROM (
@@ -122,12 +121,12 @@ FROM (
   FROM (
     SELECT /*+ BROADCAST(q) */ q.query_id, c.neighbor_id,
            {dot} / (q.q_nrm * c.nrm) AS cos_raw
-    FROM bf_corpus_v c CROSS JOIN bf_queries_v q
+    FROM {{c}} c CROSS JOIN {{q}} q
     WHERE q.query_id != c.neighbor_id
   )
 )
 WHERE rank <= {k}
-""")
+""", c=c, q=q)
 
 
 def mmr_rerank(
@@ -258,23 +257,6 @@ def lsh_bucket(vec: Column, n_planes: int = N_PLANES) -> Column:
         proj = _proj(vec, plane)
         bucket = bucket + F.when(proj > 0, F.lit(1 << j)).otherwise(F.lit(0))
     return bucket
-
-
-def lsh_table_buckets(vec: Column, planes_per_table: int, n_tables: int) -> Column:
-    """Array of bucket ids, one per LSH table (OR-construction): table j
-    uses its own disjoint plane slice LSH_PLANES[j*m:(j+1)*m].  AND within a
-    table (all m bits must match) controls precision; OR across tables
-    controls recall — the standard (m, L) LSH trade (MMDS ch.3)."""
-    m = planes_per_table
-    assert m * n_tables <= len(LSH_PLANES), "not enough precomputed planes"
-    buckets = []
-    for j in range(n_tables):
-        bucket = F.lit(0)
-        for i, plane in enumerate(LSH_PLANES[j * m : (j + 1) * m]):
-            proj = _proj(vec, plane)
-            bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        buckets.append(bucket)
-    return F.array(*buckets)
 
 
 def embedding_lsh_pairs(
@@ -564,29 +546,40 @@ def _pq_encode_agg_floor() -> str:
     )
 
 
-def _pq_scan_sql(id_col: str, k: int, d_expr: str) -> str:
-    """One-analysis-pass SQL for subspace split -> argmin encode -> ADC
-    broadcast join -> integer sum -> windowed top-k, over the
-    pq_corpus_v / pq_cb_v / pq_qtab_v temp views (round 14 — replaces the
-    per-op DataFrame chain; expression-identical, proven row-identical)."""
+def _pq_scan(
+    corpus: DataFrame,
+    cb_rows: list[tuple],
+    qtab_rows: list[tuple],
+    id_col: str,
+    k: int,
+    d_expr: str,
+) -> DataFrame:
+    """Subspace split -> argmin encode -> ADC broadcast join -> integer
+    sum -> windowed top-k as ONE spark.sql() program (round 14 — replaces
+    the per-op DataFrame chain; expression-identical, proven
+    row-identical), shared by both PQ tiers.  The driver-computed codebook
+    and ADC-table rows broadcast as local relations; ``d_expr`` is the
+    tier's encode-argmin distance grid."""
+    spark = corpus.sparkSession
+    codebook, qtab = _pq_local_dfs(spark, cb_rows, qtab_rows)
     slices = ", ".join(
         f"slice(embedding, {m * PQ_SUBDIM + 1}, {PQ_SUBDIM})" for m in range(PQ_M)
     )
-    return f"""
+    return spark.sql(f"""
 WITH sub AS (
   SELECT {id_col} AS vid, posexplode(array({slices})) AS (m, subvec)
-  FROM pq_corpus_v
+  FROM {{corpus}}
 ),
 codes AS (
   SELECT vid, m, mn.k AS code FROM (
     SELECT /*+ BROADCAST(cb) */ s.vid, s.m,
            min(named_struct('d', {d_expr}, 'k', cb.k)) AS mn
-    FROM sub s JOIN pq_cb_v cb ON s.m = cb.m
+    FROM sub s JOIN {{cb}} cb ON s.m = cb.m
     GROUP BY s.vid, s.m)
 ),
 scored AS (
   SELECT /*+ BROADCAST(q) */ q.query_id, c.vid AS neighbor_id, sum(q.d_int) AS s
-  FROM codes c JOIN pq_qtab_v q ON c.m = q.m AND c.code = q.code
+  FROM codes c JOIN {{qtab}} q ON c.m = q.m AND c.code = q.code
   WHERE c.vid != q.query_id
   GROUP BY q.query_id, c.vid
 )
@@ -597,7 +590,7 @@ FROM (SELECT query_id, neighbor_id, s,
                                 ORDER BY s ASC, neighbor_id) AS rank
       FROM scored)
 WHERE rank <= {k}
-"""
+""", corpus=corpus, cb=codebook, qtab=qtab)
 
 
 def _pq_subspaces(df: DataFrame, id_col: str, out_id: str) -> DataFrame:
@@ -687,12 +680,11 @@ def _pq_local_setup(
 
 
 def _pq_local_dfs(
-    corpus: DataFrame, queries: DataFrame, id_col: str = "vec_id"
+    spark: SparkSession, cb_rows: list[tuple], qtab_rows: list[tuple]
 ) -> tuple[DataFrame, DataFrame]:
-    """_pq_local_setup materialized as two LOCAL relations: broadcasting
-    them costs no scan jobs (the exchange reads driver-local rows)."""
-    cb_rows, qtab_rows = _pq_local_setup(corpus, queries, id_col)
-    spark = corpus.sparkSession
+    """Driver-computed codebook and ADC-table rows as two LOCAL relations:
+    broadcasting them costs no scan jobs (the exchange reads driver-local
+    rows)."""
     codebook = spark.createDataFrame(cb_rows, "m int, k int, cent array<double>")
     qtab = spark.createDataFrame(
         qtab_rows, "query_id bigint, m int, code int, d_int bigint"
@@ -745,24 +737,16 @@ def topk_pq(
     Catalyst re-optimization per run.  Broadcast-join the small side; do
     not literal-fuse it.
 
-    Round 14: encode + ADC scan + rank are ONE spark.sql() program over
-    the corpus / codebook / ADC-table views instead of ~10 chained
-    DataFrame ops — construction paid a py4j round trip plus an eager
-    re-analysis of the growing tree per op (~0.5 s of pure driver time at
-    sf0.1 for this key, the r13 'eager per-op analysis' floor item); one
-    SQL string analyzes the identical tree once.  The expressions are
+    Round 14: encode + ADC scan + rank are ONE spark.sql() program
+    (_pq_scan) instead of ~10 chained DataFrame ops — construction paid a
+    py4j round trip plus an eager re-analysis of the growing tree per op
+    (~0.5 s of pure driver time at sf0.1 for this key, the r13 'eager
+    per-op analysis' floor item); one SQL string analyzes the identical
+    tree once.  The expressions are
     1:1 replicas (power == **, element_at is 1-based in both, struct-min
     argmin field order (d, k) unchanged), proven row-identical."""
     cb_rows, qtab_rows = _pq_local_setup(corpus, queries, id_col)
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        cb_rows, "m int, k int, cent array<double>"
-    ).createOrReplaceTempView("pq_cb_v")
-    spark.createDataFrame(
-        qtab_rows, "query_id bigint, m int, code int, d_int bigint"
-    ).createOrReplaceTempView("pq_qtab_v")
-    corpus.createOrReplaceTempView("pq_corpus_v")
-    return spark.sql(_pq_scan_sql(id_col, k, _pq_encode_agg_seed()))
+    return _pq_scan(corpus, cb_rows, qtab_rows, id_col, k, _pq_encode_agg_seed())
 
 
 def topk_ivfpq(
@@ -780,7 +764,9 @@ def topk_ivfpq(
     each partition holding 4-byte PQ codes instead of raw vectors.  The
     probe side broadcasts |queries| x nprobe x 128 table rows; the scan is
     an equi-join on (cluster, subspace, code) + exact integer ADC sums."""
-    codebook, qtab = _pq_local_dfs(corpus, queries, id_col)
+    codebook, qtab = _pq_local_dfs(
+        corpus.sparkSession, *_pq_local_setup(corpus, queries, id_col)
+    )
     codes = pq_encode(corpus, codebook, id_col).join(
         corpus.select(F.col(id_col).alias("vid"), F.col(label_col).alias("cluster")),
         "vid",
@@ -1033,12 +1019,4 @@ def topk_pq_trained(
     # dataflow; only the argmin grid differs — floor(d * 2^14), no round).
     # The dropped any_value(subvec) of _pq_floor_argmin was dead here (the
     # old .select pruned it); grouped rows are unchanged.
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        cb, "m int, k int, cent array<double>"
-    ).createOrReplaceTempView("pq_cb_v")
-    spark.createDataFrame(
-        qtab_rows, "query_id bigint, m int, code int, d_int bigint"
-    ).createOrReplaceTempView("pq_qtab_v")
-    corpus.createOrReplaceTempView("pq_corpus_v")
-    return spark.sql(_pq_scan_sql(id_col, k, _pq_encode_agg_floor()))
+    return _pq_scan(corpus, cb, qtab_rows, id_col, k, _pq_encode_agg_floor())

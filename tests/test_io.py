@@ -313,3 +313,19 @@ def test_schema_memo_events_ts_fixup_survives(spark, sf_dir):
     a = first.agg(F.min("ts"), F.max("ts")).collect()[0]
     b = second.agg(F.min("ts"), F.max("ts")).collect()[0]
     assert a == b
+
+
+def test_schema_memo_sees_file_rewritten_in_place(spark, tmp_path):
+    """The memo is stamped with the file's size and mtime: a parquet file
+    rewritten at the same path with a different schema is read with the
+    new schema, not the memoized one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [0, 1, 2]}), path)
+    assert io.table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"b": [0, 1, 2], "c": ["x", "y", "z"]}), path)
+    again = io.table(spark, str(tmp_path), "t")
+    assert again.columns == ["b", "c"]
+    assert sorted(r.b for r in again.collect()) == [0, 1, 2]

@@ -22,17 +22,11 @@ if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
 import bench  # noqa: E402
+from experiments_datafusion_spark.plans.audit import explain_str  # noqa: E402
 from experiments_datafusion_spark.queries import all_queries  # noqa: E402
 from experiments_datafusion_spark.session import get_spark  # noqa: E402
 
 PLANS_DIR = REPO / "plans" / "r14"
-
-
-def _explain_formatted(df) -> str:
-    jqe = df._jdf.queryExecution()
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return jqe.explainString(mode)
 
 
 def main() -> None:
@@ -61,7 +55,7 @@ def main() -> None:
         PLANS_DIR.mkdir(parents=True, exist_ok=True)
         for name in keys:
             df = registry[name].fn(spark, bench.SF_DIR)
-            txt = _explain_formatted(df)
+            txt = explain_str(df, "formatted")
             (PLANS_DIR / f"{name}_{suffix}.txt").write_text(txt)
             n_exchange = txt.count("Exchange")
             print(f"{name}: {len(txt.splitlines())} lines, {n_exchange} Exchange refs")

@@ -22,6 +22,13 @@ Design rules, each one a scale decision:
 * **No data ever moves through the driver** — commits are distributed
   writes, reads are distributed scans; the driver only touches the file
   LIST.
+* **Every commit kind writes once and publishes through one
+  put-if-absent path.**  ``_write_files`` is the only parquet write and
+  ``_commit`` the only publish: it reads the parent, applies the kind's
+  checks, carries ``txns``, publishes, rebases where the kind commutes,
+  and removes the commit's data dir on any failure.  Metadata a subclass
+  adds (EvolvingLog's ``columns``/``schema_v``) is stamped into the entry
+  before that one publish, never re-published after it.
 
 The reference repo has no table format (it benches in-memory sorts); this
 layer exists because the maintenance family grew one hand-rolled snapshot
@@ -33,8 +40,11 @@ manifests, CDF row shape) re-expressed as plain parquet + JSON.
 from __future__ import annotations
 
 import contextlib
+import itertools
 import json
+import math
 import os
+import shutil
 import threading
 import uuid
 from dataclasses import dataclass
@@ -82,6 +92,26 @@ def _append_schema_ok(table_schema, batch_schema) -> bool:
         if tn != bn or tt != bt or (b_null and not t_null):
             return False
     return True
+
+
+def _entry_schema(df: DataFrame) -> list:
+    """The entry-schema list ``[[name, type, nullable], ...]`` of ``df``."""
+    return [[f.name, f.dataType.simpleString(), f.nullable] for f in df.schema]
+
+
+def _local_path(p: str) -> str:
+    """A manifest path from a ``_metadata.file_path`` / file: URI."""
+    return p[len("file:"):] if p.startswith("file:") else p
+
+
+def _replayed(txns: dict, txn: tuple[str, int]) -> int | None:
+    """The commit version recorded in ``txns`` for ``txn=(app_id,
+    txn_version)`` if that batch (or a later one) already landed, else
+    None."""
+    rec = txns.get(txn[0])
+    if rec is not None and int(rec[0]) >= int(txn[1]):
+        return int(rec[1])
+    return None
 
 
 class SnapshotLog:
@@ -147,10 +177,10 @@ class SnapshotLog:
                 os.remove(tmp)
 
     def _republish(self, version: int, entry: dict) -> None:
-        """Replace an entry THIS writer already owns (post-publish stamp
-        of extra metadata on the version it just committed) — the only
-        place replacement is legal, because ownership was established by
-        winning the _publish link."""
+        """Replace an entry THIS writer already owns — the only place
+        replacement is legal, because ownership was established by winning
+        the _publish link.  Only ``stamp_ts`` uses it: a commit's own
+        metadata is part of its one publish (``_commit``)."""
         tmp = self._tmp_path(version)
         with open(tmp, "w") as fh:
             json.dump(entry, fh)
@@ -184,15 +214,150 @@ class SnapshotLog:
                 return dict(e["txns"])
         return {}
 
-    @staticmethod
-    def _set_txns(entry: dict, txns: dict) -> None:
-        """Attach a non-empty txn map (empty maps are omitted to keep
-        txn-less tables' entries lean; carry-forward still converges
-        because once any entry holds ``txns`` every descendant does)."""
-        if txns:
-            entry["txns"] = txns
-
     # ---- write side ---------------------------------------------------------
+    #
+    # Every commit kind is the same two steps: ``_write_files`` lands the
+    # kind's data (if it has any), then ``_commit`` publishes the entry.
+    # The kinds differ only in the data-dir name, the entry they build from
+    # the parent, and whether a lost publish rebases.
+
+    def _write_files(
+        self, df: DataFrame, dir_name: str, stats_cols=None, cluster=None
+    ) -> list[dict]:
+        """Write ``df`` as parquet under ``root/dir_name``; returns the
+        manifest dicts (path, size) of its part-files.
+
+        ``stats_cols`` records per-file [lo, hi] + row counts for those
+        columns (ONE distributed aggregate over the files just written);
+        ``cluster`` tags every file as a member of that clustering cube.
+
+        Two writers racing one ``v{N}`` collide at the mode("error") write
+        before either reaches the log — that surfaces as the CommitConflict
+        it is, and the directory (the other writer's) is left alone.  Any
+        failure after the write removes the directory."""
+        data_dir = os.path.join(self.root, dir_name)
+        try:
+            df.write.mode("error").parquet(data_dir)
+        except Exception as exc:
+            if "PATH_ALREADY_EXISTS" in str(exc) or "already exists" in str(exc):
+                raise CommitConflict(
+                    f"data dir {dir_name} already exists — another writer "
+                    "is committing this version (single-writer commits do "
+                    "not rebase)"
+                ) from exc
+            raise
+        try:
+            files = [
+                {"path": p, "size": os.path.getsize(p)}
+                for p in sorted(
+                    os.path.join(data_dir, f)
+                    for f in os.listdir(data_dir)
+                    if f.endswith(".parquet")
+                )
+            ]
+            if stats_cols:
+                stats = file_stats_nd(
+                    df.sparkSession.read.parquet(*[f["path"] for f in files]),
+                    stats_cols,
+                )
+                by_path = {_local_path(r.file_path): r for r in stats}
+                for f in files:
+                    r = by_path.get(f["path"])
+                    if r is None:
+                        # an EMPTY part-file contributes no group to the
+                        # stats aggregate — record it as such
+                        f["n_rows"] = 0
+                        f["stats"] = {}
+                        continue
+                    f["n_rows"] = r.n_rows
+                    # a file whose stats column is all-NULL has no [lo, hi];
+                    # omit that column's block (stats_only_agg/prune raise
+                    # loudly on a missing block instead of min()-ing None)
+                    f["stats"] = {
+                        c: [getattr(r, f"{c}_lo"), getattr(r, f"{c}_hi")]
+                        for c in stats_cols
+                        if getattr(r, f"{c}_lo") is not None
+                        and getattr(r, f"{c}_hi") is not None
+                    }
+            if cluster:
+                for f in files:
+                    f["cluster"] = list(cluster)
+        except BaseException:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            raise
+        return files
+
+    def _finish_entry(self, entry: dict, parent: int) -> None:
+        """Last edit of a built entry before its publish.  The plain log
+        adds nothing; EvolvingLog stamps its column metadata here, so the
+        stamp is part of the one put-if-absent write."""
+
+    def _commit(
+        self,
+        build,
+        parent: int | None = None,
+        attempts: int = 1,
+        txn: tuple[str, int] | None = None,
+        on_replay=None,
+        data_dir: str | None = None,
+    ) -> int:
+        """The one publish path of every commit kind.
+
+        ``build(parent, parent_entry)`` applies the kind's parent checks
+        (raising to refuse) and returns the entry's fields — with fresh
+        file dicts, since ``_finish_entry`` may stamp them.  The path adds
+        the version, carries the parent's ``txns`` forward (recording
+        ``txn``), lets ``_finish_entry`` complete the entry, and publishes
+        it put-if-absent.
+
+        ``parent`` pins the parent of a single-writer kind, whose data dir
+        is named after the version: a lost publish raises CommitConflict.
+        With ``parent=None`` each of ``attempts`` tries re-reads the latest
+        version — the optimistic rebase.  A replayed ``txn`` publishes
+        nothing, calls ``on_replay`` and returns the recorded version.
+        ``data_dir`` — the directory under ``root`` this commit wrote — is
+        removed on a replay and on any failure, since nothing references
+        it."""
+
+        def drop_data() -> None:
+            if data_dir is not None:
+                shutil.rmtree(os.path.join(self.root, data_dir), ignore_errors=True)
+
+        try:
+            for _ in range(attempts):
+                p = self.latest_version() if parent is None else parent
+                entry = {"version": p + 1}
+                entry.update(build(p, self.entry(p) if p >= 0 else None))
+                txns = self._parent_txns(p)
+                if txn is not None:
+                    done = _replayed(txns, txn)
+                    if done is not None:
+                        # the batch already landed (possibly by a
+                        # concurrent retry): answer from the carried map
+                        drop_data()
+                        if on_replay is not None:
+                            on_replay()
+                        return done
+                    txns[txn[0]] = [int(txn[1]), p + 1]
+                if txns:
+                    # empty maps are omitted to keep txn-less tables'
+                    # entries lean; carry-forward still converges because
+                    # once any entry holds ``txns`` every descendant does
+                    entry["txns"] = txns
+                self._finish_entry(entry, p)
+                try:
+                    self._publish(p + 1, entry)
+                    return p + 1
+                except CommitConflict:
+                    if parent is not None:
+                        raise
+                    # rebase: somebody else won this version
+            raise CommitConflict(
+                f"commit did not land after {attempts} rebase attempts"
+            )
+        except BaseException:
+            drop_data()
+            raise
 
     def commit(
         self,
@@ -223,84 +388,75 @@ class SnapshotLog:
         a clustering CUBE on those columns — the liquid-clustering ZCube
         idea: ``compact_incremental`` later rewrites only files NOT in a
         cube of the requested spec, leaving settled cubes untouched."""
+        return self._commit_df(df, note, kind, stats_cols, cluster_tag)
+
+    def _commit_df(
+        self, df, note, kind="data", stats_cols=None, cluster=None, columns=None
+    ) -> int:
+        """``commit``, plus the ``columns`` an EvolvingLog's full commits
+        set (None leaves them to ``_finish_entry``).  A full rewrite READ
+        the whole table, so per the Delta rules NO concurrent commit
+        commutes with it: there is no rebase, the caller must re-derive
+        (commit_rewrite_checked / commit_append_rebased are the
+        rebaseable shapes)."""
         parent = self.latest_version()
-        version = parent + 1
-        data_dir = os.path.join(self.root, f"v{version}")
-        try:
-            df.write.mode("error").parquet(data_dir)
-        except Exception as exc:
-            # two FULL commits racing the same version collide at the
-            # data-dir write (mode("error") on v{N}) before either
-            # reaches the log — surface it as the conflict it is.  A
-            # full rewrite READ the whole table, so per the Delta rules
-            # NO concurrent commit commutes with it: there is no rebase,
-            # the caller must re-derive (commit_rewrite_checked /
-            # commit_append_rebased are the rebaseable shapes).
-            if "PATH_ALREADY_EXISTS" in str(exc) or "already exists" in str(exc):
-                raise CommitConflict(
-                    f"data dir v{version} already exists — another writer "
-                    "is committing this version (full commits do not rebase)"
-                ) from exc
-            raise
-        try:
-            files = sorted(
-                os.path.join(data_dir, f)
-                for f in os.listdir(data_dir)
-                if f.endswith(".parquet")
-            )
+        name = f"v{parent + 1}"
+        files = self._write_files(df, name, stats_cols, cluster)
+
+        def build(_parent, _pe) -> dict:
             entry = {
-                "version": version,
                 "note": note,
                 "kind": kind,
-                "schema": [
-                    [f.name, f.dataType.simpleString(), f.nullable] for f in df.schema
-                ],
-                "files": [{"path": p, "size": os.path.getsize(p)} for p in files],
+                "schema": _entry_schema(df),
+                "files": [dict(f) for f in files],
             }
-            self._set_txns(entry, self._parent_txns(parent))
-            if stats_cols:
-                spark = df.sparkSession
-                stats = file_stats_nd(spark.read.parquet(*files), stats_cols)
-                by_path = {
-                    r.file_path[len("file:"):]
-                    if r.file_path.startswith("file:")
-                    else r.file_path: r
-                    for r in stats
-                }
-                for f in entry["files"]:
-                    r = by_path.get(f["path"])
-                    if r is None:
-                        # an EMPTY part-file contributes no group to the
-                        # stats aggregate — record it as such (the old
-                        # KeyError here orphaned the data dir)
-                        f["n_rows"] = 0
-                        f["stats"] = {}
-                        continue
-                    f["n_rows"] = r.n_rows
-                    # a file whose stats column is all-NULL has no [lo, hi];
-                    # omit that column's block (stats_only_agg/prune raise
-                    # loudly on a missing block instead of min()-ing None)
-                    f["stats"] = {
-                        c: [getattr(r, f"{c}_lo"), getattr(r, f"{c}_hi")]
-                        for c in stats_cols
-                        if getattr(r, f"{c}_lo") is not None
-                        and getattr(r, f"{c}_hi") is not None
-                    }
-            if cluster_tag:
-                for f in entry["files"]:
-                    f["cluster"] = list(cluster_tag)
-            self._publish(version, entry)
-        except BaseException:
-            # anything failing AFTER the parquet write but BEFORE the
-            # publish (stats drift, CommitConflict) must not leave an
-            # orphaned v{N} directory — the next commit at this version
-            # writes mode("error") and would wedge on the leftovers
-            import shutil
+            if columns is not None:
+                entry["columns"] = columns
+            return entry
 
-            with contextlib.suppress(FileNotFoundError):
-                shutil.rmtree(data_dir)
-            raise
-        return version
+        return self._commit(build, parent=parent, data_dir=name)
+
+    @staticmethod
+    def _append_entry(new_files: list[dict], schema: list, note: str, kind: str):
+        """``build`` of the append kinds: refuse a staged parent, check the
+        batch schema against the table's, and list the parent's files
+        plus ``new_files``."""
+
+        def build(parent: int, pe) -> dict:
+            entry_schema = schema
+            files = []
+            if pe is not None:
+                if pe.get("kind") == "staged":
+                    # appends extend the PUBLISHED lineage; an append on top
+                    # of a staged (unpublished) snapshot would carry its
+                    # files into a data entry and leak the un-audited batch
+                    # to consumers — publish or abandon the staged one first
+                    raise ValueError(
+                        f"cannot append onto staged version {parent}; "
+                        "publish_staged or vacuum it first"
+                    )
+                want = pe.get("schema")
+                if want is not None and not _append_schema_ok(want, schema):
+                    raise ValueError(
+                        f"append schema mismatch: table has {want}, "
+                        f"batch has {schema}"
+                    )
+                if want is not None:
+                    # the entry records the TABLE's schema: carried-forward
+                    # files may hold NULLs a non-nullable batch doesn't
+                    entry_schema = want
+                # carry the parent's file dicts VERBATIM (round 13): an
+                # append must not strip carried files' write-time stats /
+                # cluster tags
+                files = [dict(f) for f in pe["files"]]
+            return {
+                "note": note,
+                "kind": kind,
+                "schema": entry_schema,
+                "files": files + [dict(f) for f in new_files],
+            }
+
+        return build
 
     def commit_append(
         self,
@@ -333,63 +489,14 @@ class SnapshotLog:
         <= the recorded one) is a no-op returning the recorded commit
         version — and writes nothing."""
         parent = self.latest_version()
-        txns = self._parent_txns(parent)
         if txn is not None:
-            app_id, txn_version = txn
-            rec = txns.get(app_id)
-            if rec is not None and int(rec[0]) >= int(txn_version):
-                return int(rec[1])  # replay: answered from the carried map
-        schema = [[f.name, f.dataType.simpleString(), f.nullable] for f in df.schema]
-        if parent >= 0:
-            pe = self.entry(parent)
-            if pe.get("kind") == "staged":
-                # appends extend the PUBLISHED lineage; an append on top of
-                # a staged (unpublished) snapshot would carry its files
-                # into a data entry and leak the un-audited batch to
-                # consumers — publish or abandon the staged version first
-                raise ValueError(
-                    f"cannot append onto staged version {parent}; "
-                    "publish_staged or vacuum it first"
-                )
-            want = pe.get("schema")
-            if want is not None and not _append_schema_ok(want, schema):
-                raise ValueError(
-                    f"append schema mismatch: table has {want}, batch has {schema}"
-                )
-            if want is not None:
-                # the entry records the TABLE's schema: carried-forward
-                # files may hold NULLs a non-nullable batch doesn't
-                schema = want
-        parent_files = (
-            # carry the parent's file dicts VERBATIM (round 13): an append
-            # must not strip carried files' write-time stats / cluster
-            # tags — rebuilding {path, size} from the manifest silently
-            # un-clustered the table's metadata on every ingest
-            [dict(f) for f in self.entry(parent)["files"]]
-            if parent >= 0
-            else []
-        )
-        version = parent + 1
-        data_dir = os.path.join(self.root, f"v{version}")
-        df.write.mode("error").parquet(data_dir)
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-        entry = {
-            "version": version,
-            "note": note,
-            "kind": kind,
-            "schema": schema,
-            "files": parent_files
-            + [{"path": p, "size": os.path.getsize(p)} for p in new_files],
-        }
-        if txn is not None:
-            txns[txn[0]] = [int(txn[1]), version]
-        self._set_txns(entry, txns)
-        self._publish(version, entry)
-        return version
+            done = _replayed(self._parent_txns(parent), txn)
+            if done is not None:
+                return done  # replay: answered from the carried map
+        name = f"v{parent + 1}"
+        files = self._write_files(df, name)
+        build = self._append_entry(files, _entry_schema(df), note, kind)
+        return self._commit(build, parent=parent, txn=txn, data_dir=name)
 
     def commit_append_rebased(
         self,
@@ -419,36 +526,10 @@ class SnapshotLog:
         interposition test pins this).  A rebase that discovers the txn
         already recorded (this writer's own batch replayed concurrently)
         returns the recorded version and removes its now-orphan data."""
-        import shutil
-        import uuid
-
-        data_dir = os.path.join(self.root, f"b-{uuid.uuid4().hex[:12]}")
-        df.write.mode("error").parquet(data_dir)
-        new_files = [
-            {"path": p, "size": os.path.getsize(p)}
-            for p in sorted(
-                os.path.join(data_dir, f)
-                for f in os.listdir(data_dir)
-                if f.endswith(".parquet")
-            )
-        ]
-        schema = [[f.name, f.dataType.simpleString(), f.nullable] for f in df.schema]
-        try:
-            return self.commit_append_files(
-                new_files,
-                schema,
-                note=note,
-                kind=kind,
-                attempts=attempts,
-                txn=txn,
-                on_replay=lambda: shutil.rmtree(data_dir, ignore_errors=True),
-            )
-        except BaseException:
-            # attempts exhausted / schema drift / staged parent: the batch
-            # never became referenced — remove the orphan data directory
-            # (same cleanup contract as commit()'s failure path)
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise
+        name = f"b-{uuid.uuid4().hex[:12]}"
+        files = self._write_files(df, name)
+        build = self._append_entry(files, _entry_schema(df), note, kind)
+        return self._commit(build, attempts=attempts, txn=txn, data_dir=name)
 
     def commit_append_files(
         self,
@@ -460,73 +541,17 @@ class SnapshotLog:
         txn: tuple[str, int] | None = None,
         on_replay=None,
     ) -> int:
-        """The publish half of ``commit_append_rebased``, factored so
-        callers that already hold written data files — the snaplog
-        streaming SINK's driver-side commit of executor-written parquet
-        (round 12), exactly the Delta sink's task-files → one-log-commit
-        shape — share the same rebase loop, schema check, txn-map merge,
-        and put-if-absent publish.  ``new_files`` is ``[{"path", "size"},
-        ...]``; ``schema`` is the entry-schema list.  ``on_replay`` is
-        invoked (before returning the recorded version) when ``txn``
-        reveals the batch already landed, so the caller can drop its
-        now-orphan files."""
-        for _ in range(attempts):
-            parent = self.latest_version()
-            entry_schema = schema
-            txns: dict = {}
-            if parent >= 0:
-                pe = self.entry(parent)
-                if pe.get("kind") == "staged":
-                    raise ValueError(
-                        f"cannot append onto staged version {parent}; "
-                        "publish_staged or vacuum it first"
-                    )
-                want = pe.get("schema")
-                if want is not None and not _append_schema_ok(want, schema):
-                    raise ValueError(
-                        f"append schema mismatch: table has {want}, "
-                        f"batch has {schema}"
-                    )
-                if want is not None:
-                    entry_schema = want  # the TABLE's schema (see commit_append)
-                # _parent_txns, not pe["txns"]: a legacy tip without the
-                # carry rule must promote older apps' records (ADVICE r12 #3)
-                txns = (
-                    dict(pe["txns"])
-                    if "txns" in pe
-                    else self._parent_txns(parent)
-                )
-            if txn is not None:
-                rec = txns.get(txn[0])
-                if rec is not None and int(rec[0]) >= int(txn[1]):
-                    # replayed batch already landed (possibly by a
-                    # concurrent retry): answer from the carried map
-                    if on_replay is not None:
-                        on_replay()
-                    return int(rec[1])
-                txns[txn[0]] = [int(txn[1]), parent + 1]
-            parent_files = (
-                # verbatim carry: keep stats/cluster blocks (round 13)
-                [dict(f) for f in self.entry(parent)["files"]]
-                if parent >= 0
-                else []
-            )
-            entry = {
-                "version": parent + 1,
-                "note": note,
-                "kind": kind,
-                "schema": entry_schema,
-                "files": parent_files + new_files,
-            }
-            self._set_txns(entry, txns)
-            try:
-                self._publish(parent + 1, entry)
-                return parent + 1
-            except CommitConflict:
-                continue  # rebase: somebody else won this version
-        raise CommitConflict(
-            f"append did not land after {attempts} rebase attempts"
-        )
+        """The publish half of ``commit_append_rebased``, for callers that
+        already hold written data files — the snaplog streaming SINK's
+        driver-side commit of executor-written parquet (round 12), exactly
+        the Delta sink's task-files → one-log-commit shape — sharing the
+        same rebase loop, schema check, txn-map merge, and put-if-absent
+        publish.  ``new_files`` is ``[{"path", "size"}, ...]``; ``schema``
+        is the entry-schema list.  ``on_replay`` is invoked (before
+        returning the recorded version) when ``txn`` reveals the batch
+        already landed, so the caller can drop its now-orphan files."""
+        build = self._append_entry(new_files, schema, note, kind)
+        return self._commit(build, attempts=attempts, txn=txn, on_replay=on_replay)
 
     def commit_rewrite(
         self,
@@ -544,44 +569,29 @@ class SnapshotLog:
         whole-table rewrite is the entire point of clustering + manifest
         stats (prune the affected set first, then rewrite just it)."""
         parent = self.latest_version()
-        by_path = (
-            {f["path"]: f for f in self.entry(parent)["files"]}
-            if parent >= 0
-            else {}
-        )
-        version = parent + 1
-        data_dir = os.path.join(self.root, f"v{version}")
-        df_new.write.mode("error").parquet(data_dir)
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-        entry = {
-            "version": version,
-            "note": note,
-            "kind": kind,
-            "schema": [
-                [f.name, f.dataType.simpleString(), f.nullable]
-                for f in df_new.schema
-            ],
-            # keep_files may arrive as file: URIs (the _metadata.file_path
-            # form stats manifests carry); normalize to plain paths, and
-            # carry the parent's dict verbatim when the path is known —
-            # a partial rewrite must not strip kept files' stats/cluster
-            # blocks (round 13)
-            "files": [
-                dict(by_path.get(p) or {"path": p, "size": os.path.getsize(p)})
-                for p in sorted(
-                    k[len("file:"):] if k.startswith("file:") else k
-                    for k in keep_files
-                )
-            ]
-            + [{"path": p, "size": os.path.getsize(p)} for p in new_files],
-        }
-        self._set_txns(entry, self._parent_txns(parent))
-        self._publish(version, entry)
-        return version
+        name = f"v{parent + 1}"
+        files = self._write_files(df_new, name)
+        # keep_files may arrive as file: URIs (the _metadata.file_path form
+        # stats manifests carry)
+        keep = sorted(_local_path(k) for k in keep_files)
+
+        def build(_parent, pe) -> dict:
+            by_path = {f["path"]: f for f in pe["files"]} if pe else {}
+            return {
+                "note": note,
+                "kind": kind,
+                "schema": _entry_schema(df_new),
+                # carry the parent's dict verbatim when the path is known —
+                # a partial rewrite must not strip kept files' stats/cluster
+                # blocks (round 13)
+                "files": [
+                    dict(by_path.get(p) or {"path": p, "size": os.path.getsize(p)})
+                    for p in keep
+                ]
+                + [dict(f) for f in files],
+            }
+
+        return self._commit(build, parent=parent, data_dir=name)
 
     def commit_rewrite_checked(
         self,
@@ -628,76 +638,44 @@ class SnapshotLog:
         interpose a concurrent commit deterministically, replacing the
         ``_publish`` monkey-patch the round-11 key used (VERDICT r11
         wrong #3)."""
-        import shutil
+        name = f"rw-{uuid.uuid4().hex[:12]}"
+        files = self._write_files(df_new, name)
+        removed = {_local_path(p) for p in removed_files}
+        read_set = removed | {_local_path(p) for p in keep_files}
+        attempt = itertools.count()
 
-        data_dir = os.path.join(self.root, f"rw-{uuid.uuid4().hex[:12]}")
-        df_new.write.mode("error").parquet(data_dir)
-        new_files = [
-            {"path": p, "size": os.path.getsize(p)}
-            for p in sorted(
-                os.path.join(data_dir, f)
-                for f in os.listdir(data_dir)
-                if f.endswith(".parquet")
-            )
-        ]
+        def build(parent: int, pe) -> dict:
+            if pe is None:
+                raise ValueError("rewrite needs an existing table version")
+            if pe.get("kind") == "staged":
+                raise ValueError(
+                    f"cannot rewrite onto staged version {parent}; "
+                    "publish_staged or vacuum it first"
+                )
+            live = {f["path"]: f for f in pe["files"]}
+            gone = sorted(read_set - set(live))
+            if gone:
+                raise ConcurrentModification(
+                    "concurrent commit removed files this rewrite read "
+                    f"(same-data race, cannot rebase): {gone[:3]}"
+                )
+            entry = {
+                "note": note,
+                "kind": kind,
+                "schema": _entry_schema(df_new),
+                # rebase: everything live except what we rewrote — which
+                # carries concurrently APPENDED files forward — plus ours
+                # (dicts verbatim: stats/cluster/schema_v survive, r13)
+                "files": [
+                    dict(f) for p, f in sorted(live.items()) if p not in removed
+                ]
+                + [dict(f) for f in files],
+            }
+            if on_publish_attempt is not None:
+                on_publish_attempt(next(attempt))
+            return entry
 
-        def norm(p: str) -> str:
-            return p[len("file:"):] if p.startswith("file:") else p
-
-        keep = {norm(p) for p in keep_files}
-        removed = {norm(p) for p in removed_files}
-        read_set = keep | removed
-        schema = [[f.name, f.dataType.simpleString(), f.nullable] for f in df_new.schema]
-        try:
-            for attempt in range(attempts):
-                parent = self.latest_version()
-                if parent < 0:
-                    raise ValueError("rewrite needs an existing table version")
-                pe = self.entry(parent)
-                if pe.get("kind") == "staged":
-                    raise ValueError(
-                        f"cannot rewrite onto staged version {parent}; "
-                        "publish_staged or vacuum it first"
-                    )
-                live = {f["path"]: f for f in pe["files"]}
-                gone = sorted(read_set - set(live))
-                if gone:
-                    raise ConcurrentModification(
-                        "concurrent commit removed files this rewrite read "
-                        f"(same-data race, cannot rebase): {gone[:3]}"
-                    )
-                entry = {
-                    "version": parent + 1,
-                    "note": note,
-                    "kind": kind,
-                    "schema": schema,
-                    # rebase: everything live except what we rewrote — which
-                    # carries concurrently APPENDED files forward — plus ours
-                    # (dicts verbatim: stats/cluster/schema_v survive, r13)
-                    "files": [
-                        dict(f)
-                        for p, f in sorted(live.items())
-                        if p not in removed
-                    ]
-                    + new_files,
-                }
-                self._set_txns(entry, self._parent_txns(parent))
-                if on_publish_attempt is not None:
-                    on_publish_attempt(attempt)
-                try:
-                    self._publish(parent + 1, entry)
-                    return parent + 1
-                except CommitConflict:
-                    continue  # rebase: somebody else won this version
-            raise CommitConflict(
-                f"rewrite did not land after {attempts} rebase attempts"
-            )
-        except BaseException:
-            # abort paths (ConcurrentModification, staged parent, attempts
-            # exhausted) must not leave the rw-* data directory behind —
-            # same orphan-cleanup contract as commit() (ADVICE r11)
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise
+        return self._commit(build, attempts=attempts, data_dir=name)
 
     # ---- log side -----------------------------------------------------------
     #
@@ -918,36 +896,27 @@ class SnapshotLog:
         per-column tightness for skippability on each — the right layout
         when two predicates share a table.  Mutually exclusive with
         ``sort_cols``."""
-        import math
-
         if sort_cols and zorder_cols:
             raise ValueError("compact: sort_cols and zorder_cols are exclusive")
         v = self.latest_version() if version is None else version
-        total = sum(fe.size for fe in self.manifest(v))
+        src = self.entry(v)
+        total = sum(f["size"] for f in src["files"])
         n = max(1, math.ceil(total / target_file_bytes))
-        df = self.read(spark, v)
+        df = _clustered(self.read(spark, v), n, sort_cols, zorder_cols)
+        note = f"compact v{v} -> {n} files"
         if sort_cols:
-            df = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
-            return self.commit(
-                df,
-                note=f"compact v{v} -> {n} files clustered on {list(sort_cols)}",
-                stats_cols=list(sort_cols),
-                cluster_tag=list(sort_cols),
-            )
-        if zorder_cols:
-            df = (
-                df.withColumn("_z", zorder_col([F.col(c) for c in zorder_cols]))
-                .repartitionByRange(n, "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-            return self.commit(
-                df,
-                note=f"compact v{v} -> {n} files zordered on {list(zorder_cols)}",
-                stats_cols=list(zorder_cols),
-                cluster_tag=["z:" + c for c in zorder_cols],
-            )
-        return self.commit(df.repartition(n), note=f"compact v{v} -> {n} files")
+            note += f" clustered on {list(sort_cols)}"
+        elif zorder_cols:
+            note += f" zordered on {list(zorder_cols)}"
+        # the rewrite read ``v`` through its column list (EvolvingLog), so
+        # every compacted file carries exactly those columns
+        return self._commit_df(
+            df,
+            note,
+            stats_cols=list(sort_cols or zorder_cols or []),
+            cluster=_cluster_spec(sort_cols, zorder_cols),
+            columns=src.get("columns"),
+        )
 
     def compact_incremental(
         self,
@@ -980,13 +949,11 @@ class SnapshotLog:
         resets it.  Returns the current version unchanged when every
         file is already clustered (idempotent, like OPTIMIZE on a
         settled table)."""
-        import math
-
         if bool(sort_cols) == bool(zorder_cols):
             raise ValueError(
                 "compact_incremental: exactly one of sort_cols/zorder_cols"
             )
-        spec = list(sort_cols) if sort_cols else ["z:" + c for c in zorder_cols]
+        spec = _cluster_spec(sort_cols, zorder_cols)
         cols = list(sort_cols or zorder_cols)
         v = self.latest_version()
         entry = self.entry(v)
@@ -996,68 +963,30 @@ class SnapshotLog:
             return v
         total = sum(f["size"] for f in todo)
         n = max(1, math.ceil(total / target_file_bytes))
-        df = self._read_manifest_files(spark, entry, todo)
-        if sort_cols:
-            df = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-        else:
-            df = (
-                df.withColumn("_z", zorder_col([F.col(c) for c in cols]))
-                .repartitionByRange(n, "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-        version = v + 1
-        data_dir = os.path.join(self.root, f"v{version}")
-        df.write.mode("error").parquet(data_dir)
-        try:
-            paths = sorted(
-                os.path.join(data_dir, f)
-                for f in os.listdir(data_dir)
-                if f.endswith(".parquet")
-            )
-            new_files = [{"path": p, "size": os.path.getsize(p)} for p in paths]
-            stats = file_stats_nd(spark.read.parquet(*paths), cols)
-            by_path = {
-                r.file_path[len("file:"):]
-                if r.file_path.startswith("file:")
-                else r.file_path: r
-                for r in stats
-            }
-            for f in new_files:
-                r = by_path.get(f["path"])
-                f["cluster"] = spec
-                if r is None:
-                    f["n_rows"] = 0
-                    f["stats"] = {}
-                    continue
-                f["n_rows"] = r.n_rows
-                f["stats"] = {
-                    c: [getattr(r, f"{c}_lo"), getattr(r, f"{c}_hi")]
-                    for c in cols
-                    if getattr(r, f"{c}_lo") is not None
-                    and getattr(r, f"{c}_hi") is not None
-                }
+        df = _clustered(
+            self._read_manifest_files(spark, entry, todo), n, sort_cols, zorder_cols
+        )
+        name = f"v{v + 1}"
+        files = self._write_files(df, name, stats_cols=cols, cluster=spec)
+
+        def build(_parent, _pe) -> dict:
             new_entry = {
-                "version": version,
                 "note": (
                     f"incremental compact: {len(todo)} unclustered file(s) "
-                    f"-> {len(new_files)} cube file(s) on {cols}; "
+                    f"-> {len(files)} cube file(s) on {cols}; "
                     f"{len(keep)} settled file(s) untouched"
                 ),
                 "kind": "compacted",
                 "schema": entry.get("schema"),
                 # settled cube files carried VERBATIM (stats + tag intact)
-                "files": [dict(f) for f in keep] + new_files,
+                "files": [dict(f) for f in keep] + [dict(f) for f in files],
             }
-            self._set_txns(new_entry, self._parent_txns(v))
-            self._publish(version, new_entry)
-        except BaseException:
-            import shutil
+            if "columns" in entry:
+                # the todo files were read through v's column list
+                new_entry["columns"] = entry["columns"]
+            return new_entry
 
-            with contextlib.suppress(FileNotFoundError):
-                shutil.rmtree(data_dir)
-            raise
-        return version
+        return self._commit(build, parent=v, data_dir=name)
 
     def stats_manifest(self, spark: SparkSession, version: int, col: str):
         """Per-file [lo, hi, n_rows] stats for ``col`` — the add-file stats
@@ -1125,21 +1054,34 @@ class EvolvingLog(SnapshotLog):
 
     Entries gain ``"columns": [[id, name, type], ...]`` (the live schema)
     and each manifest file gains ``"schema_v"``: the version whose column
-    list the file was WRITTEN under.  ``read_evolved`` groups the manifest
-    by schema_v, maps each group's physical names to the live schema by
-    id (casting where the type widened, NULL where the column didn't
-    exist yet), and unions — so one scan spans files written under any
-    number of historical schemas."""
+    list the file was WRITTEN under.  Both are part of the published
+    entry: every commit kind goes through ``_finish_entry`` before its one
+    put-if-absent publish, so no reader ever sees an entry without them.
+    ``read_evolved`` groups the manifest by schema_v, maps each group's
+    physical names to the live schema by id (casting where the type
+    widened, NULL where the column didn't exist yet), and unions — so one
+    scan spans files written under any number of historical schemas."""
 
-    def _stamp(self, version: int, columns, schema_v_of: dict | None = None) -> None:
-        """Re-stamp the entry THIS writer just published with columns +
-        per-file schema_v (ownership established by the _publish link, so
-        replacement is legal here — see _republish)."""
-        entry = self.entry(version)
-        entry["columns"] = [[int(i), n, t] for i, n, t in columns]
+    def _finish_entry(self, entry: dict, parent: int) -> None:
+        """Stamp the column metadata into the entry before its publish.
+        ``columns`` comes from the parent unless the commit set it
+        (commit_columns, evolve, both compactions, restore, clone); every file
+        without a ``schema_v`` — a file this commit wrote — lands at the
+        new version, while carried files keep theirs.  Files written under
+        inherited columns must carry the live names, or the id mapping
+        would resolve them to the wrong columns: refused loudly."""
+        if "columns" not in entry and parent >= 0:
+            live = self._live_cols_at(parent)
+            written = [c[0] for c in entry.get("schema") or []]
+            if any("schema_v" not in f for f in entry["files"]) and written != [
+                c[1] for c in live
+            ]:
+                raise ValueError(
+                    f"schema mismatch: live columns {live}, written {written}"
+                )
+            entry["columns"] = [list(c) for c in live]
         for f in entry["files"]:
-            f["schema_v"] = (schema_v_of or {}).get(f["path"], version)
-        self._republish(version, entry)
+            f.setdefault("schema_v", entry["version"])
 
     def commit_columns(self, df: DataFrame, columns, note: str = "") -> int:
         """Full commit under an id-carrying schema.  ``columns`` is
@@ -1147,31 +1089,14 @@ class EvolvingLog(SnapshotLog):
         order — ids are the caller's stable identity for each column."""
         if [n for _i, n, _t in columns] != list(df.columns):
             raise ValueError(f"columns {columns} do not match df {df.columns}")
-        v = self.commit(df, note=note)
-        self._stamp(v, columns)
-        return v
+        return self._commit_df(df, note, columns=[[int(i), n, t] for i, n, t in columns])
 
     def append_columns(self, df: DataFrame, note: str = "", txn=None) -> int:
         """Append commit: new files are written under the CURRENT live
-        schema; carried-forward parent files keep their original
-        schema_v (they are referenced, never rewritten).  ``txn`` as in
-        ``commit_append`` (the SetTransaction record lands in the commit
-        entry; the _stamp below only re-stamps column metadata on the
-        version this writer just won)."""
-        parent = self.latest_version()
-        columns = self.entry(parent)["columns"]
-        if [c[1] for c in columns] != list(df.columns):
-            raise ValueError(
-                f"append schema mismatch: live columns {columns}, df {df.columns}"
-            )
-        parent_sv = {
-            f["path"]: f["schema_v"] for f in self.entry(parent)["files"]
-        }
-        v = self.commit_append(df, note=note, txn=txn)
-        if txn is not None and v <= parent:
-            return v  # replayed batch: nothing committed, nothing to stamp
-        self._stamp(v, [tuple(c) for c in columns], schema_v_of=parent_sv)
-        return v
+        schema (``df`` must carry the live names); carried-forward parent
+        files keep their original schema_v (they are referenced, never
+        rewritten).  ``txn`` as in ``commit_append``."""
+        return self.commit_append(df, note=note, txn=txn)
 
     def evolve(self, new_columns, note: str = "", attempts: int = 10) -> int:
         """METADATA-ONLY schema evolution: the new version references the
@@ -1192,9 +1117,8 @@ class EvolvingLog(SnapshotLog):
         silent column resurrection happens."""
         base_parent = self.latest_version()
         base_cols = self.entry(base_parent)["columns"]
-        for _ in range(attempts):
-            parent = self.latest_version()
-            pe = self.entry(parent)
+
+        def build(parent: int, pe) -> dict:
             if pe.get("kind") == "staged":
                 raise ValueError(
                     f"cannot evolve on staged version {parent}; "
@@ -1206,21 +1130,14 @@ class EvolvingLog(SnapshotLog):
                     f"{base_cols} to {pe.get('columns')} while this evolve "
                     "was derived — re-derive against the new schema"
                 )
-            version = parent + 1
-            entry = {
-                "version": version,
+            return {
                 "note": note,
                 "kind": "schema-evolution",
                 "columns": [[int(i), n, t] for i, n, t in new_columns],
                 "files": [dict(f) for f in pe["files"]],
             }
-            self._set_txns(entry, self._parent_txns(parent))
-            try:
-                self._publish(version, entry)
-                return version
-            except CommitConflict:
-                continue  # rebase: somebody else won this version
-        raise CommitConflict(f"evolve did not land after {attempts} attempts")
+
+        return self._commit(build, attempts=attempts)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """On an EvolvingLog the id-mapped scan IS the table view: a plain
@@ -1234,49 +1151,12 @@ class EvolvingLog(SnapshotLog):
 
     def _live_cols_at(self, version: int) -> list:
         """The live column list governing ``version``: its own stamp, or
-        the nearest ancestor's (a staged parent may interpose)."""
+        the nearest ancestor's (a legacy unstamped entry may interpose)."""
         for v in range(version, -1, -1):
             e = self.entry(v)
             if "columns" in e:
                 return [tuple(c) for c in e["columns"]]
         raise ValueError(f"no column stamp at or below version {version}")
-
-    def _stamp_keep(self, version: int, cols) -> None:
-        """Stamp ``columns`` on an entry this writer just published,
-        PRESERVING every carried file's existing schema_v (the verbatim
-        dict carry keeps them); files without one — the files this commit
-        wrote — land at the new generation."""
-        entry = self.entry(version)
-        sv_of = {
-            f["path"]: f["schema_v"] for f in entry["files"] if "schema_v" in f
-        }
-        self._stamp(version, cols, schema_v_of=sv_of)
-
-    def _rewrite_cols_checked(self, df: DataFrame) -> list:
-        cols = self._live_cols_at(self.latest_version())
-        if [c[1] for c in cols] != list(df.columns):
-            raise ValueError(
-                f"rewrite schema mismatch: live columns {cols}, "
-                f"df {df.columns}"
-            )
-        return cols
-
-    def commit_rewrite(
-        self,
-        df_new: DataFrame,
-        keep_files,
-        note: str = "",
-        kind: str = "data",
-    ) -> int:
-        """Partial rewrite under the id mapping (round 13): the rewritten
-        files land at the LIVE generation, kept files keep their
-        schema_v, and the entry is re-stamped with the live columns —
-        without this the inherited path published an entry with neither,
-        breaking every subsequent evolved read (KeyError)."""
-        cols = self._rewrite_cols_checked(df_new)
-        v = super().commit_rewrite(df_new, keep_files, note=note, kind=kind)
-        self._stamp_keep(v, cols)
-        return v
 
     def commit_rewrite_checked(
         self,
@@ -1288,11 +1168,11 @@ class EvolvingLog(SnapshotLog):
         attempts: int = 10,
         on_publish_attempt=None,
     ) -> int:
-        """Concurrent-safe partial rewrite under the id mapping — same
-        stamping contract as ``commit_rewrite`` above; concurrently
+        """Concurrent-safe partial rewrite under the id mapping: the
+        rewritten files land at the live generation, and concurrently
         appended files carried by the rebase keep their own schema_v
         through the verbatim dict carry."""
-        cols = self._rewrite_cols_checked(df_new)
+        cols = self._live_cols_at(self.latest_version())
 
         def guard(attempt: int) -> None:
             # a concurrent EVOLVE does not commute with this rewrite: the
@@ -1310,7 +1190,7 @@ class EvolvingLog(SnapshotLog):
             if on_publish_attempt is not None:
                 on_publish_attempt(attempt)
 
-        v = super().commit_rewrite_checked(
+        return super().commit_rewrite_checked(
             df_new,
             keep_files,
             removed_files,
@@ -1319,71 +1199,11 @@ class EvolvingLog(SnapshotLog):
             attempts=attempts,
             on_publish_attempt=guard,
         )
-        self._stamp_keep(v, cols)
-        return v
-
-    def compact(
-        self,
-        spark: SparkSession,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        version: int | None = None,
-        sort_cols=None,
-        zorder_cols=None,
-    ) -> int:
-        """Compaction under the id mapping (round 13): the rewrite reads
-        through ``read_evolved`` (the ``read`` override above), and the
-        new entry is re-stamped with the live column list and
-        ``schema_v`` = the compact version itself — every rewritten file
-        is at the LIVE generation, so ``read_evolved`` and the snaplog
-        reader keep resolving the table after OPTIMIZE.  Without the
-        stamp the compacted entry lost ``columns`` entirely (KeyError on
-        the next evolved read) while the plain-read rewrite NULLed
-        renamed columns — the silent-corruption pair this override
-        closes."""
-        parent = self.latest_version() if version is None else version
-        cols = [tuple(c) for c in self.entry(parent)["columns"]]
-        v = super().compact(
-            spark,
-            target_file_bytes=target_file_bytes,
-            version=version,
-            sort_cols=sort_cols,
-            zorder_cols=zorder_cols,
-        )
-        self._stamp(v, cols)
-        return v
-
-    def compact_incremental(
-        self,
-        spark: SparkSession,
-        sort_cols=None,
-        zorder_cols=None,
-        target_file_bytes: int = 128 * 1024 * 1024,
-    ) -> int:
-        """Incremental OPTIMIZE under the id mapping (round 13): the todo
-        files are read through the id-mapped ``_read_manifest_files``
-        override (they may span schema generations), the rewritten cube
-        lands at the LIVE generation, and carried cube files KEEP their
-        original ``schema_v``."""
-        parent = self.latest_version()
-        cols = [tuple(c) for c in self.entry(parent)["columns"]]
-        keep_sv = {
-            f["path"]: f["schema_v"] for f in self.entry(parent)["files"]
-        }
-        v = super().compact_incremental(
-            spark,
-            sort_cols=sort_cols,
-            zorder_cols=zorder_cols,
-            target_file_bytes=target_file_bytes,
-        )
-        if v == parent:
-            return v  # settled table: no new entry to stamp
-        self._stamp(v, cols, schema_v_of=keep_sv)
-        return v
 
     def _read_manifest_files(self, spark: SparkSession, entry: dict, files) -> DataFrame:
         """Id-mapped read of a manifest subset: group by schema generation,
-        project each group to the live schema through the column ids,
-        union — read_evolved's dataflow restricted to ``files``."""
+        project each group to the entry's live schema through the column
+        ids, union."""
         live = [(int(i), n, t) for i, n, t in entry["columns"]]
         by_schema: dict[int, list[str]] = {}
         for f in files:
@@ -1400,7 +1220,7 @@ class EvolvingLog(SnapshotLog):
             part = spark.read.parquet(*sorted(paths)).select(*proj)
             out = part if out is None else out.unionByName(part)
         if out is None:
-            raise ValueError("no files to read")
+            raise ValueError(f"version {entry['version']} has no data files")
         return out
 
     def read_evolved(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -1409,26 +1229,34 @@ class EvolvingLog(SnapshotLog):
         each projected to the live schema, unioned.  The number of
         sub-scans is the number of SCHEMAS in play (a handful), not the
         number of files."""
-        v = self.latest_version() if version is None else version
-        entry = self.entry(v)
-        live = [(int(i), n, t) for i, n, t in entry["columns"]]
-        by_schema: dict[int, list[str]] = {}
-        for f in entry["files"]:
-            by_schema.setdefault(int(f["schema_v"]), []).append(f["path"])
-        out = None
-        for sv, paths in sorted(by_schema.items()):
-            written = {int(i): (n, t) for i, n, t in self.entry(sv)["columns"]}
-            proj = [
-                F.col(written[i][0]).cast(t).alias(n)
-                if i in written
-                else F.lit(None).cast(t).alias(n)
-                for i, n, t in live
-            ]
-            part = spark.read.parquet(*sorted(paths)).select(*proj)
-            out = part if out is None else out.unionByName(part)
-        if out is None:
-            raise ValueError(f"version {v} has no data files")
-        return out
+        entry = self.entry(self.latest_version() if version is None else version)
+        return self._read_manifest_files(spark, entry, entry["files"])
+
+
+def _cluster_spec(sort_cols, zorder_cols) -> list | None:
+    """The cube tag of a clustering spec: the sort columns, or each
+    Z-order column prefixed ``z:``; None when neither is given."""
+    if sort_cols:
+        return list(sort_cols)
+    if zorder_cols:
+        return ["z:" + c for c in zorder_cols]
+    return None
+
+
+def _clustered(df: DataFrame, n: int, sort_cols, zorder_cols) -> DataFrame:
+    """``df`` cut into ``n`` files by the clustering spec: range-cut and
+    sorted on ``sort_cols`` or on the Z-value of ``zorder_cols``, or
+    round-robin when neither is given."""
+    if sort_cols:
+        return df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
+    if zorder_cols:
+        return (
+            df.withColumn("_z", zorder_col([F.col(c) for c in zorder_cols]))
+            .repartitionByRange(n, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z")
+        )
+    return df.repartition(n)
 
 
 def zorder_col(cols, bits_per_dim: int = 16):
@@ -1537,20 +1365,11 @@ def append_once(log: SnapshotLog, df: DataFrame, app_id: str, txn_version: int) 
     the append is visible without its dedup record (the old post-publish
     ``_republish`` had exactly that window), and racing writers for
     OTHER app_ids rebase over each other, merging maps instead of
-    clobbering them."""
-    rec = _latest_txns(log).get(app_id)
-    if rec is not None and int(rec[0]) >= int(txn_version):
-        return int(rec[1])  # replay fast-path: nothing written at all
-    if isinstance(log, EvolvingLog):
-        # id-mapped target (round 13): route through append_columns so
-        # the new entry re-stamps the live columns and the new files'
-        # generation — the plain rebased append published neither,
-        # breaking the next evolved read (the compaction-probe bug class)
-        return log.append_columns(
-            df,
-            note=f"{app_id} txn {txn_version}",
-            txn=(app_id, int(txn_version)),
-        )
+    clobbering them.  On an EvolvingLog the same entry carries the live
+    columns and the new files' generation (``_finish_entry``)."""
+    done = _replayed(_latest_txns(log), (app_id, txn_version))
+    if done is not None:
+        return done  # replay fast-path: nothing written at all
     return log.commit_append_rebased(
         df, note=f"{app_id} txn {txn_version}", txn=(app_id, int(txn_version))
     )
@@ -1747,20 +1566,10 @@ def commit_staged(log: SnapshotLog, df: DataFrame, note: str = "") -> int:
     written exactly once, at full parallelism, BEFORE anyone can read
     it.
 
-    On an EvolvingLog (round 13) the staged entry is stamped with the
-    live columns and its files with the current generation — the batch
-    must match the live schema, and the audit read (AS OF the staged
-    version) resolves through the id mapping like any other."""
-    if isinstance(log, EvolvingLog):
-        cols = log._live_cols_at(log.latest_version())
-        if [c[1] for c in cols] != list(df.columns):
-            raise ValueError(
-                f"staged batch schema mismatch: live columns {cols}, "
-                f"df {df.columns}"
-            )
-        v = log.commit(df, note=note, kind="staged")
-        log._stamp(v, cols)
-        return v
+    On an EvolvingLog the staged entry carries the live columns and its
+    files the new generation — the batch must match the live schema, and
+    the audit read (AS OF the staged version) resolves through the id
+    mapping like any other."""
     return log.commit(df, note=note, kind="staged")
 
 
@@ -1779,34 +1588,23 @@ def publish_staged(
     so it commutes with any concurrent commit — on CommitConflict the
     rebase re-resolves the (possibly moved) published head and retries,
     exactly like commit_append_rebased; the staged files are added onto
-    whatever head won."""
+    whatever head won.  Every carried file (head AND staged) keeps its
+    schema_v, so a stage -> evolve -> publish interleaving on an
+    EvolvingLog still resolves each file through its own generation."""
     e = log.entry(staged_version)
     if e.get("kind") != "staged":
         raise ValueError(f"version {staged_version} is not a staged snapshot")
-    for _ in range(attempts):
-        head_files = [dict(f) for f in log.entry(head_published(log))["files"]]
-        parent = log.latest_version()
-        version = parent + 1
-        entry = {
-            "version": version,
+
+    def build(_parent, _pe) -> dict:
+        head = log.entry(head_published(log))
+        return {
             "note": note or f"publish staged v{staged_version}",
             "kind": "data",
             "schema": e.get("schema"),
-            "files": head_files + [dict(f) for f in e["files"]],
+            "files": [dict(f) for f in head["files"] + e["files"]],
         }
-        log._set_txns(entry, log._parent_txns(parent))
-        try:
-            log._publish(version, entry)
-            if isinstance(log, EvolvingLog):
-                # stamp the live columns; every carried file (head AND
-                # staged — both stamped at their own commits) keeps its
-                # schema_v, so a stage -> evolve -> publish interleaving
-                # still resolves each file through its own generation
-                log._stamp_keep(version, log._live_cols_at(version))
-            return version
-        except CommitConflict:
-            continue  # rebase: re-resolve the head, retry
-    raise CommitConflict(f"publish did not land after {attempts} attempts")
+
+    return log._commit(build, attempts=attempts)
 
 
 def head_published(log: SnapshotLog) -> int:
@@ -1836,16 +1634,13 @@ def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLo
     cloned shallow — the clone's reader could never resolve them; the
     refusal is loud and actionable (``compact()`` lands every file at
     the live generation, after which the clone is self-contained and
-    comes back as an EvolvingLog with its own v0 stamp).  Without this
-    the inherited path silently returned a PLAIN log whose name-keyed
-    read corrupted renamed columns — the compaction-probe bug class."""
+    comes back as an EvolvingLog with every file at its own v0).  The
+    clone is a new table identity, so it starts with no ``txns``."""
     e = src.entry(src.latest_version())
-    if isinstance(src, EvolvingLog):
-        live = src._live_cols_at(src.latest_version())
-        live_lists = [list(c) for c in live]
+    live = e.get("columns")
+    if live is not None:
         for f in e["files"]:
-            written = src.entry(int(f["schema_v"])).get("columns")
-            if [list(c) for c in (written or [])] != live_lists:
+            if src.entry(int(f["schema_v"])).get("columns") != live:
                 raise ValueError(
                     "shallow clone of an id-mapped log with mixed schema "
                     "generations: the squashed clone entry cannot resolve "
@@ -1853,31 +1648,55 @@ def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLo
                     "land at the live generation) or materialize with "
                     "read_evolved"
                 )
-        dst = EvolvingLog(dst_root)
-        if dst.latest_version() >= 0:
-            raise ValueError("clone target already has a log")
+    dst = type(src)(dst_root)
+    if dst.latest_version() >= 0:
+        raise ValueError("clone target already has a log")
+
+    def build(_parent, _pe) -> dict:
         entry = {
-            "version": 0,
             "note": note or f"shallow clone of {src.root} v{e['version']}",
+            "kind": "data",
+            "schema": e.get("schema"),
+            # the clone's v0 is its only generation: dropping the source's
+            # schema_v lets the clone stamp every file there
+            "files": [
+                {k: x for k, x in f.items() if k != "schema_v"} for f in e["files"]
+            ],
+        }
+        if live is not None:
+            entry["columns"] = live
+        return entry
+
+    dst._commit(build, parent=-1)
+    return dst
+
+
+def restore_version(log: SnapshotLog, version: int, note: str = "") -> int:
+    """Delta RESTORE semantics: roll the table back to ``version`` by
+    committing a NEW entry that references the old version's files —
+    metadata-only, history preserved (the bad commits stay readable for
+    forensics until vacuumed), and the rollback is itself a forward
+    commit, so time travel and CDF over the restore behave like any other
+    version transition.  The SetTransaction map carries through from the
+    CURRENT tip (not the restored version): a rollback of table DATA must
+    not also roll back streaming writers' dedup state, or their next
+    retry would re-append batches the table already ingested.  RESTORE of
+    an id-mapped table restores its column list too; carried files keep
+    their own generations."""
+    e = log.entry(version)
+
+    def build(_parent, _pe) -> dict:
+        entry = {
+            "note": note or f"restore v{version}",
             "kind": "data",
             "schema": e.get("schema"),
             "files": [dict(f) for f in e["files"]],
         }
-        dst._publish(0, entry)
-        dst._stamp(0, live)  # self-contained: every file at the clone's v0
-        return dst
-    dst = SnapshotLog(dst_root)
-    if dst.latest_version() >= 0:
-        raise ValueError("clone target already has a log")
-    entry = {
-        "version": 0,
-        "note": note or f"shallow clone of {src.root} v{e['version']}",
-        "kind": "data",
-        "schema": e.get("schema"),
-        "files": [dict(f) for f in e["files"]],
-    }
-    dst._publish(0, entry)
-    return dst
+        if "columns" in e:
+            entry["columns"] = e["columns"]
+        return entry
+
+    return log._commit(build, parent=log.latest_version())
 
 
 def file_bloom(df: DataFrame, col: str, m: int = 8192, k: int = 3):

@@ -24,6 +24,7 @@ from experiments_datafusion_spark.operators.table_format import (
     file_bloom,
     merge_into,
     merge_upsert,
+    restore_version,
 )
 from experiments_datafusion_spark.queries import register
 
@@ -1362,38 +1363,6 @@ def dedup_stream_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RST_CUT = "1995-12-01"
 _RST_BAD_MOD = 4
-
-
-def restore_version(log: SnapshotLog, version: int, note: str = "") -> int:
-    """Delta RESTORE semantics: roll the table back to ``version`` by
-    committing a NEW entry that references the old version's files —
-    metadata-only, history preserved (the bad commits stay readable for
-    forensics until vacuumed), and the rollback is itself a forward
-    commit, so time travel and CDF over the restore behave like any other
-    version transition.  The SetTransaction map carries through from the
-    CURRENT tip (not the restored version): a rollback of table DATA must
-    not also roll back streaming writers' dedup state, or their next
-    retry would re-append batches the table already ingested."""
-    e = log.entry(version)
-    parent = log.latest_version()
-    new_v = parent + 1
-    entry = {
-        "version": new_v,
-        "note": note or f"restore v{version}",
-        "kind": "data",
-        "schema": e.get("schema"),
-        "files": [dict(f) for f in e["files"]],
-    }
-    log._set_txns(entry, log._parent_txns(parent))
-    log._publish(new_v, entry)
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    if isinstance(log, EvolvingLog):
-        # RESTORE of an id-mapped table restores its SCHEMA too (Delta
-        # RESTORE semantics): stamp the TARGET version's column list;
-        # carried files keep their own generations (round 13)
-        log._stamp_keep(new_v, log._live_cols_at(version))
-    return new_v
 
 
 @register(

@@ -444,6 +444,45 @@ def test_commit_failure_before_publish_cleans_orphan_dir(spark, tmp_path):
     assert log.read(spark).count() == 5
 
 
+def _fail_publish_once(log: SnapshotLog) -> None:
+    real_publish = log._publish
+    state = {"failed": False}
+
+    def fail_once(version: int, entry: dict) -> None:
+        if not state["failed"]:
+            state["failed"] = True
+            raise RuntimeError("simulated publish failure")
+        real_publish(version, entry)
+
+    log._publish = fail_once
+
+
+def test_commit_append_failure_before_publish_cleans_orphan_dir(spark, tmp_path):
+    """commit_append names its data dir v{N} like commit(): a failed
+    publish must remove it, or the next append at that version hits the
+    leftover directory and the table is stuck."""
+    log = SnapshotLog(str(tmp_path / "t"))
+    log.commit_append(spark.range(5), note="v0")
+    _fail_publish_once(log)
+    with pytest.raises(RuntimeError, match="simulated"):
+        log.commit_append(spark.range(5, 10), note="v1")
+    assert not os.path.isdir(os.path.join(log.root, "v1"))  # orphan removed
+    assert log.commit_append(spark.range(5, 10), note="v1 retry") == 1
+    assert sorted(r.id for r in log.read(spark).collect()) == list(range(10))
+
+
+def test_commit_rewrite_failure_before_publish_cleans_orphan_dir(spark, tmp_path):
+    """Same contract for the single-writer partial rewrite."""
+    log = SnapshotLog(str(tmp_path / "t"))
+    log.commit(spark.range(10), note="v0")
+    _fail_publish_once(log)
+    with pytest.raises(RuntimeError, match="simulated"):
+        log.commit_rewrite(spark.range(3), keep_files=[], note="v1")
+    assert not os.path.isdir(os.path.join(log.root, "v1"))  # orphan removed
+    assert log.commit_rewrite(spark.range(3), keep_files=[], note="v1 retry") == 1
+    assert sorted(r.id for r in log.read(spark).collect()) == [0, 1, 2]
+
+
 # ---- clustering compaction -----------------------------------------------------------
 
 

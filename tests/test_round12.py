@@ -61,6 +61,70 @@ def test_append_once_txn_published_atomically_no_republish(spark, tmp_path, monk
     assert log.versions() == [0]
 
 
+def test_evolving_log_commits_stamp_columns_without_republish(spark, tmp_path, monkeypatch):
+    """Every commit kind on an EvolvingLog publishes ``columns`` and the
+    files' ``schema_v`` IN its one put-if-absent entry: _republish (a
+    post-publish stamp, leaving a window in which the tip has no column
+    list to resolve through) never runs, and the tip resolves after
+    every step."""
+    from experiments_datafusion_spark.operators.table_format import (
+        EvolvingLog,
+        clone_shallow,
+    )
+    from experiments_datafusion_spark.queries.round10 import restore_version
+
+    def forbidden(self, version, entry):
+        raise AssertionError("a commit re-published its entry")
+
+    monkeypatch.setattr(SnapshotLog, "_republish", forbidden)
+    log = EvolvingLog(str(tmp_path / "t"))
+
+    def df(*rows):
+        return spark.createDataFrame(list(rows), "k bigint, v bigint")
+
+    def check(want, target=log):
+        tip = target.entry(target.latest_version())
+        assert "columns" in tip
+        assert all("schema_v" in f for f in tip["files"])
+        assert sorted((r.k, r.v) for r in target.read_evolved(spark).collect()) == want
+
+    log.commit_columns(
+        spark.createDataFrame([(1, 10), (2, 20)], "k bigint, price int"),
+        [(1, "k", "bigint"), (2, "price", "int")],
+    )
+    log.evolve([(1, "k", "bigint"), (2, "v", "bigint")], note="rename+widen")
+    check([(1, 10), (2, 20)])
+    log.append_columns(df((3, 30)))
+    check([(1, 10), (2, 20), (3, 30)])
+    v_once = append_once(log, df((4, 40)), app_id="a", txn_version=0)
+    check([(1, 10), (2, 20), (3, 30), (4, 40)])
+    log.commit_rewrite(log.read_evolved(spark).where("k != 1"), keep_files=[])
+    check([(2, 20), (3, 30), (4, 40)])
+    live = [f["path"] for f in log.entry(log.latest_version())["files"]]
+    log.commit_rewrite_checked(
+        log.read_evolved(spark).withColumn(
+            "v", F.when(F.col("k") == 2, F.lit(21)).otherwise(F.col("v"))
+        ),
+        keep_files=[],
+        removed_files=live,
+    )
+    check([(2, 21), (3, 30), (4, 40)])
+    sv = commit_staged(log, df((5, 50)))
+    assert sorted((r.k, r.v) for r in log.read_evolved(spark, sv).collect()) == [(5, 50)]
+    publish_staged(log, sv)
+    check([(2, 21), (3, 30), (4, 40), (5, 50)])
+    restore_version(log, v_once)
+    check([(1, 10), (2, 20), (3, 30), (4, 40)])
+    log.compact(spark, target_file_bytes=1 << 30)
+    check([(1, 10), (2, 20), (3, 30), (4, 40)])
+    log.append_columns(df((6, 60)))
+    log.compact_incremental(spark, sort_cols=["k"], target_file_bytes=1 << 30)
+    check([(1, 10), (2, 20), (3, 30), (4, 40), (6, 60)])
+    log.compact(spark, target_file_bytes=1 << 30)
+    dst = clone_shallow(log, str(tmp_path / "clone"))
+    check([(1, 10), (2, 20), (3, 30), (4, 40), (6, 60)], target=dst)
+
+
 def test_append_once_two_app_interposition_loses_no_record(spark, tmp_path, monkeypatch):
     """Two apps racing one table (the ADVICE r11 #1 scenario): app B's
     append_once lands INSIDE app A's first publish attempt.  A's rebase

@@ -20,6 +20,7 @@ REPO = Path(__file__).resolve().parents[1]
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
+from bench import force  # noqa: E402
 from experiments_datafusion_spark.queries import all_queries  # noqa: E402
 from experiments_datafusion_spark.session import get_spark  # noqa: E402
 
@@ -29,10 +30,6 @@ from experiments_datafusion_spark.session import get_spark  # noqa: E402
 # the same way).
 KEYS = ("dedup_exact", "tpch_q6", "topk", "ev_tumbling", "agg_stats")
 SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

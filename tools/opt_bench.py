@@ -7,7 +7,8 @@ dump `.explain("formatted")` for any set of keys into plans/r13/.
 Usage:
   python tools/opt_bench.py bench [out.json]       # headline windows only
   python tools/opt_bench.py plans <suffix> [keys]  # plans/r13/<key>_<suffix>.txt
-  python tools/opt_bench.py time <key> [reps]      # isolate one key, best/median of reps
+  python tools/opt_bench.py time <key>... [--reps N]  # isolate keys: total,
+      construct (building the DataFrame) and execute (forcing it) per rep
 """
 
 from __future__ import annotations
@@ -73,14 +74,19 @@ def main() -> None:
         for name in names:
             sc.setJobDescription(f"opt_bench warmup {name}")
             bench.force(registry[name].fn(spark, bench.SF_DIR))
-            times = []
+            times, construct, execute = [], [], []
             jobs = stages = tasks = 0
             for i in range(reps):
                 group = f"opt-{name}-{i}"
                 sc.setJobGroup(group, name)
                 t0 = time.perf_counter()
-                bench.force(registry[name].fn(spark, bench.SF_DIR))
-                times.append(round(time.perf_counter() - t0, 4))
+                df = registry[name].fn(spark, bench.SF_DIR)
+                t1 = time.perf_counter()
+                bench.force(df)
+                t2 = time.perf_counter()
+                times.append(round(t2 - t0, 4))
+                construct.append(round(t1 - t0, 4))
+                execute.append(round(t2 - t1, 4))
                 if i == 0:
                     st = sc.statusTracker()
                     jids = st.getJobIdsForGroup(group)
@@ -103,6 +109,10 @@ def main() -> None:
                         "times": times,
                         "best": min(times),
                         "median": sorted(times)[len(times) // 2],
+                        "construct": construct,
+                        "execute": execute,
+                        "construct_median": sorted(construct)[len(construct) // 2],
+                        "execute_median": sorted(execute)[len(execute) // 2],
                         "jobs": jobs,
                         "stages": stages,
                         "tasks": tasks,

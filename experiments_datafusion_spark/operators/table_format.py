@@ -755,16 +755,7 @@ class SnapshotLog:
         file list is ONLY the unaudited batch, and surfacing it would
         break the staged-versions-are-invisible invariant the versionAsOf
         path already enforces (Delta resolves the same way)."""
-        best = None
-        for v in self.versions():
-            e = self.entry(v)
-            if e.get("kind") == "staged":
-                continue
-            if e.get("ts") is not None and e["ts"] <= ts:
-                best = v
-        if best is None:
-            raise ValueError(f"no version committed at or before ts={ts}")
-        return best
+        return LogView(self.root).resolve(timestamp_as_of=ts)
 
     def stamp_ts(self, version: int, ts: float) -> None:
         """Re-stamp a version's commit timestamp (ownership rule as in
@@ -1204,18 +1195,14 @@ class EvolvingLog(SnapshotLog):
         """Id-mapped read of a manifest subset: group by schema generation,
         project each group to the entry's live schema through the column
         ids, union."""
-        live = [(int(i), n, t) for i, n, t in entry["columns"]]
         by_schema: dict[int, list[str]] = {}
         for f in files:
             by_schema.setdefault(int(f["schema_v"]), []).append(f["path"])
         out = None
         for sv, paths in sorted(by_schema.items()):
-            written = {int(i): (n, t) for i, n, t in self.entry(sv)["columns"]}
             proj = [
-                F.col(written[i][0]).cast(t).alias(n)
-                if i in written
-                else F.lit(None).cast(t).alias(n)
-                for i, n, t in live
+                (F.col(w) if w is not None else F.lit(None)).cast(t).alias(n)
+                for n, w, t in id_mapping(self.entry(sv)["columns"], entry["columns"])
             ]
             part = spark.read.parquet(*sorted(paths)).select(*proj)
             out = part if out is None else out.unionByName(part)
@@ -1231,6 +1218,116 @@ class EvolvingLog(SnapshotLog):
         number of files."""
         entry = self.entry(self.latest_version() if version is None else version)
         return self._read_manifest_files(spark, entry, entry["files"])
+
+
+def id_mapping(written, live) -> list[tuple[str, str | None, str]]:
+    """How a file written under the ``written`` column list reads as the
+    ``live`` one (both ``[[id, name, type], ...]``): one ``(live_name,
+    written_name, live_type)`` per live column, ``written_name`` None
+    where the column did not exist yet.  Every id-mapped read projects
+    through this one mapping: the Spark scan of
+    ``EvolvingLog._read_manifest_files`` and the snaplog source's Arrow
+    reads (through ``LogView.file_projection``)."""
+    by_id = {int(i): n for i, n, _t in written}
+    return [(n, by_id.get(int(i)), t) for i, n, t in live]
+
+
+class LogView:
+    """One resolved read of the log's metadata — versions, entries, the
+    published (non-staged) subsequence, and each published version's
+    (added, removed) file delta against the PREVIOUS PUBLISHED version —
+    computed in one O(versions + total manifest entries) forward pass, so
+    a reader plans from one log resolution instead of one per version.
+    Staged entries never reset the delta baseline (write-audit-publish:
+    a publish emits exactly the audited batch).  Checkpointed logs read
+    identically (``SnapshotLog.versions``/``entry`` resolve checkpoint +
+    tail).
+
+    Every snapshot-log read decides from a view: which version an as-of
+    read names (``resolve``), the consumer-visible head, the incremental
+    deltas and each file's id mapping — the snaplog source's schema and
+    its scans, ``register_snaplog_sql``, ``head_published`` and
+    ``changes_incremental`` all read the same one."""
+
+    def __init__(self, root: str):
+        self.root = root
+        self.versions: list[int] = []
+        self.entries: dict[int, dict] = {}
+        # a read never creates the table: no _log dir is an empty log
+        if os.path.isdir(os.path.join(root, "_log")):
+            log = SnapshotLog(root)
+            self.versions = log.versions()
+            self.entries = {v: log.entry(v) for v in self.versions}
+        self.published = [v for v in self.versions if self.kind(v) != "staged"]
+        # delta[v] = (added file dicts in manifest order, removed paths)
+        self.delta: dict[int, tuple[list[dict], list[str]]] = {}
+        prev: set[str] = set()
+        for v in self.published:
+            files = self.entries[v]["files"]
+            cur_paths = {f["path"] for f in files}
+            added = [f for f in files if f["path"] not in prev]
+            self.delta[v] = (added, sorted(prev - cur_paths))
+            prev = cur_paths
+
+    @property
+    def head_offset(self) -> int:
+        return (self.versions[-1] + 1) if self.versions else 0
+
+    def kind(self, v: int) -> str:
+        return self.entries[v].get("kind", "data")
+
+    def head(self) -> int:
+        """The newest version consumers may read: staged entries are
+        skipped."""
+        if not self.published:
+            raise ValueError(f"no published versions under {self.root}")
+        return self.published[-1]
+
+    def resolve(self, version_as_of=None, timestamp_as_of=None) -> int:
+        """The version an AS OF read names (Delta's time-travel options,
+        mutually exclusive): ``version_as_of`` must exist and be
+        published; ``timestamp_as_of`` names the newest published version
+        committed at or before it (``SnapshotLog.version_as_of_ts``);
+        neither names the published head."""
+        if version_as_of is not None and timestamp_as_of is not None:
+            raise ValueError(
+                "snaplog: versionAsOf and timestampAsOf are mutually exclusive"
+            )
+        if version_as_of is not None:
+            v = int(version_as_of)
+            if v not in self.entries:
+                raise ValueError(f"snaplog: no version {v} under {self.root}")
+            if self.kind(v) == "staged":
+                raise ValueError(
+                    f"snaplog: version {v} is staged (write-audit-publish) — "
+                    "not consumer-visible; publish it first"
+                )
+            return v
+        if timestamp_as_of is not None:
+            ts = float(timestamp_as_of)
+            best = None
+            for v in self.published:
+                t = self.entries[v].get("ts")
+                if t is not None and t <= ts:
+                    best = v
+            if best is None:
+                raise ValueError(f"no version committed at or before ts={ts}")
+            return best
+        return self.head()
+
+    def file_projection(self, f: dict, live_cols) -> list | None:
+        """The ``id_mapping`` that reads file ``f`` as ``live_cols``, or
+        None when the file already matches them (plain logs and files
+        written under the live schema read as they are)."""
+        sv = f.get("schema_v")
+        if sv is None or live_cols is None:
+            return None
+        written = self.entries[sv].get("columns")
+        if written is None or [list(c) for c in written] == [
+            list(c) for c in live_cols
+        ]:
+            return None
+        return id_mapping(written, live_cols)
 
 
 def _cluster_spec(sort_cols, zorder_cols) -> list | None:
@@ -1503,29 +1600,23 @@ def changes_incremental(
             f"v_from={v_from} is a staged (unpublished) version — the CDF "
             "baseline must be consumer-visible"
         )
-    vs = [
-        v
-        for v in log.versions()
-        if v_from < v <= v_to and log.entry(v).get("kind") != "staged"
-    ]
+    view = LogView(log.root)
+    # v_from is published, so the first version's delta is against it
+    vs = [v for v in view.published if v_from < v <= v_to]
     if not vs:
         raise ValueError(f"no published versions in ({v_from}, {v_to}]")
-    prev_files = {fe.path for fe in log.manifest(v_from)}
     out = None
     for v in vs:
-        cur = [fe.path for fe in log.manifest(v)]
-        removed = prev_files - set(cur)
+        added, removed = view.delta[v]
         if removed:
             raise ValueError(
                 f"version {v} removed {len(removed)} file(s) — range is not "
                 "append-only; use changes_between for rewrite-bearing ranges"
             )
-        added = [p for p in cur if p not in prev_files]
-        prev_files = set(cur)
         if not added:
             continue
         part = (
-            spark.read.parquet(*added)
+            spark.read.parquet(*[f["path"] for f in added])
             .withColumn(change_col, F.lit("insert"))
             .withColumn(version_col, F.lit(v).cast("bigint"))
         )
@@ -1609,13 +1700,7 @@ def publish_staged(
 
 def head_published(log: SnapshotLog) -> int:
     """The newest version consumers may read: staged entries are skipped."""
-    head = None
-    for v in log.versions():
-        if log.entry(v).get("kind") != "staged":
-            head = v
-    if head is None:
-        raise ValueError("no published version in the log")
-    return head
+    return LogView(log.root).head()
 
 
 def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLog:

@@ -23,6 +23,7 @@ from experiments_datafusion_spark.operators.table_format import (
     SnapshotLog,
 )
 from experiments_datafusion_spark.queries import register
+from experiments_datafusion_spark.sources import register_sources
 
 # ---- the medallion hop: table -> snaplog stream -> serving view -----------------------
 
@@ -54,9 +55,6 @@ def table_log_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     any append anywhere in the chain fails the diff."""
     import tempfile
 
-    from experiments_datafusion_spark.sources.sortbench_source import (
-        register_sources,
-    )
     from experiments_datafusion_spark.streaming.pipelines import (
         stream_apply_changes,
     )

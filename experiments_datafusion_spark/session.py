@@ -54,10 +54,13 @@ def _ship_package(spark: SparkSession) -> None:
     external driver launched from a different directory, sys.path tweaks on
     the driver side never reach the workers.  ``addPyFile`` does.
 
-    The archive goes to a per-call private temp dir (never a fixed path:
+    The archive goes to a per-call private dir (never a fixed path:
     concurrent sessions on this host — driver verify, bench, pytest — would
-    race make_archive against another session's addPyFile fetch), and the
-    memo key is applicationId (stable; id(sc) can be reused after GC)."""
+    race make_archive against another session's addPyFile fetch) under the
+    context's SparkFiles root, which Spark deletes on ``stop()``; the
+    archive must outlive the call, since every task that fetches
+    dependencies re-reads it.  The memo key is applicationId (stable;
+    id(sc) can be reused after GC)."""
     sc = spark.sparkContext
     key = sc.applicationId
     if key in _SHIPPED_CONTEXTS:
@@ -66,9 +69,12 @@ def _ship_package(spark: SparkSession) -> None:
     import tempfile
     from pathlib import Path
 
+    from pyspark import SparkFiles
+
     pkg_dir = Path(__file__).resolve().parent
-    stem = str(Path(tempfile.mkdtemp(prefix="edfs_pkg_")) / "edfs_pkg")
     try:
+        tmp = tempfile.mkdtemp(prefix="edfs_pkg_", dir=SparkFiles.getRootDirectory())
+        stem = str(Path(tmp) / "edfs_pkg")
         zip_path = shutil.make_archive(
             stem, "zip", root_dir=pkg_dir.parent, base_dir=pkg_dir.name
         )

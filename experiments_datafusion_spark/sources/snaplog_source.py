@@ -13,16 +13,16 @@ added (appends add files; a full commit's files are all new), so
   * the reader never re-emits carried-forward files — consumers see each
     appended row exactly once (the incremental contract);
   * ``partitions()`` is driver-side O(new files) catalog work: the log is
-    resolved ONCE per planning call into a ``_LogView`` (versions, entries,
-    per-published-version file deltas in one forward pass) — round 12,
+    resolved ONCE per planning call into a ``LogView``
+    (operators/table_format: versions, entries, per-published-version
+    file deltas in one forward pass) — round 12,
     ADVICE r11 #5: the per-version re-resolution was O(versions^2) on long
     logs — while the actual parquet reads happen ON EXECUTORS, one task
     per new file (the distributed ``DataSourceStreamReader``, not the
     driver-side simple reader);
-  * ``read()`` yields ``pyarrow.RecordBatch``es (round 11; the per-row
-    tuple path survives only as the measured-negative ``arrow=false``
-    arm), so rows flow parquet -> Arrow -> Spark without ever
-    materializing as Python objects;
+  * ``read()`` yields ``pyarrow.RecordBatch``es (round 11), so rows flow
+    parquet -> Arrow -> Spark without ever materializing as Python
+    objects;
   * replay is trivially exact: the same version range always names the
     same immutable files, the bit-identical replay contract exactly-once
     recovery needs from a source.
@@ -102,9 +102,7 @@ Options (Spark lowercases DataSource option keys):
     fallback shape);
   * ``maxDiffBytes`` — ceiling (default 256 MiB) on the single-task
     rewrite diff; bulk rewrites past it are refused toward the
-    distributed ``changes_between`` join;
-  * ``arrow``    — default true; ``false`` keeps the legacy row-tuple
-    path (kept ONLY as the measured-negative A/B arm).
+    distributed ``changes_between`` join.
 """
 
 from __future__ import annotations
@@ -121,72 +119,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-def _log(root: str):
-    from experiments_datafusion_spark.operators.table_format import SnapshotLog
-
-    return SnapshotLog(root)
-
-
-class _LogView:
-    """One-shot resolved snapshot of the log's metadata: versions, entries,
-    the published subsequence, and each published version's (added,
-    removed) file delta vs the PREVIOUS PUBLISHED version — all computed
-    in one O(versions + total manifest entries) forward pass, so planning
-    a micro-batch costs one log resolution instead of one per version.
-    Checkpointed logs read identically (SnapshotLog.versions/entry resolve
-    checkpoint + tail)."""
-
-    def __init__(self, root: str):
-        self.versions: list[int] = []
-        self.entries: dict[int, dict] = {}
-        if os.path.isdir(os.path.join(root, "_log")):
-            log = _log(root)
-            self.versions = log.versions()
-            self.entries = {v: log.entry(v) for v in self.versions}
-        self.published = [
-            v for v in self.versions if self.entries[v].get("kind") != "staged"
-        ]
-        # delta[v] = (added file dicts in manifest order, removed paths)
-        # vs the previous PUBLISHED version — staged entries never reset
-        # the baseline (the r11 WAP rule, now precomputed)
-        self.delta: dict[int, tuple[list[dict], list[str]]] = {}
-        prev: set[str] = set()
-        for v in self.published:
-            files = self.entries[v]["files"]
-            cur_paths = {f["path"] for f in files}
-            added = [f for f in files if f["path"] not in prev]
-            self.delta[v] = (added, sorted(prev - cur_paths))
-            prev = cur_paths
-
-    @property
-    def head_offset(self) -> int:
-        return (self.versions[-1] + 1) if self.versions else 0
-
-    def kind(self, v: int) -> str:
-        return self.entries[v].get("kind", "data")
-
-    def file_projection(self, f: dict, live_cols) -> list | None:
-        """Per-file column-ID projection for EVOLVING logs (the Iceberg id
-        mapping, operators/table_format.EvolvingLog): a file written under
-        an older schema generation resolves to the LIVE schema through the
-        stable ids — ``[(live_name, physical_name | None, live_type)]``,
-        None physical = the column didn't exist yet (surfaces NULL).
-        Returns None when the file already matches the live schema (the
-        fast path — plain logs and post-evolution files)."""
-        sv = f.get("schema_v")
-        if sv is None or live_cols is None:
-            return None
-        written = self.entries[sv].get("columns")
-        if written is None or [list(c) for c in written] == [
-            list(c) for c in live_cols
-        ]:
-            return None
-        by_id = {int(i): (n, t) for i, n, t in written}
-        return [
-            (name, by_id[int(i)][0] if int(i) in by_id else None, typ)
-            for i, name, typ in live_cols
-        ]
-
+from experiments_datafusion_spark.operators.table_format import (
+    LogView,
+    SnapshotLog,
+    _entry_schema,
+)
 
 # live-schema type -> Arrow type, for the id-mapped evolved read (NULL
 # back-fill + widening casts happen executor-side in Arrow).  Only the
@@ -221,7 +158,7 @@ class _FilePartition(InputPartition):
         self.path = path
         self.version = version
         # id-mapped projection for files written under an older schema
-        # generation (see _LogView.file_projection); None = live schema
+        # generation (see LogView.file_projection); None = live schema
         self.proj = proj
 
 
@@ -259,6 +196,11 @@ class _DiffPartition(InputPartition):
         self.key_cols = key_cols  # None = full-row multiset diff
 
 
+def _flag(options: dict, key: str) -> bool:
+    """A boolean option: set only by the string ``true`` (any case)."""
+    return str(options.get(key, "false")).lower() == "true"
+
+
 def _parse_common_options(options: dict) -> dict:
     root = options.get("path")
     if not root:
@@ -267,8 +209,62 @@ def _parse_common_options(options: dict) -> dict:
     return {
         "root": root,
         "columns": [c.strip() for c in cols.split(",") if c.strip()] or None,
-        "arrow": str(options.get("arrow", "true")).lower() != "false",
     }
+
+
+def _physical_columns(proj, columns) -> list | None:
+    """The parquet columns to read for ``columns`` (None = all) of a file
+    whose id mapping is ``proj`` (None = the file has the live names)."""
+    if proj is None:
+        return columns
+    # a file predating every wanted column still needs its row count:
+    # read it whole rather than with an empty column list
+    return [
+        pn
+        for ln, pn, _t in proj
+        if pn is not None and (columns is None or ln in columns)
+    ] or None
+
+
+def _to_live(data, proj, columns):
+    """One file's Arrow data (a Table or RecordBatch read with
+    ``_physical_columns``) in the LIVE column space: the id-mapped
+    EVOLVED read renames by id, widens by cast and NULL-fills columns the
+    file predates — executor-side, in Arrow.  Data of a file without a
+    mapping is already live."""
+    if proj is None:
+        return data
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arrays, names = [], []
+    for ln, pn, t in proj:
+        if columns is not None and ln not in columns:
+            continue
+        at = _evolved_arrow_type(t)
+        if pn is None:
+            arr = pa.nulls(data.num_rows, type=at)
+        else:
+            arr = data.column(data.schema.get_field_index(pn))
+            if arr.type != at:
+                arr = pc.cast(arr, at)
+        arrays.append(arr)
+        names.append(ln)
+    return type(data).from_arrays(arrays, names=names)
+
+
+def _stamp(data, change_type: str | None, version: int):
+    """Append the CDF row shape to Arrow data: ``_change_type`` (when
+    ``change_type`` is set) and ``_commit_version``."""
+    import pyarrow as pa
+
+    if change_type is not None:
+        data = data.append_column(
+            "_change_type", pa.array([change_type] * data.num_rows, type=pa.string())
+        )
+    return data.append_column(
+        "_commit_version", pa.array([version] * data.num_rows, type=pa.int64())
+    )
 
 
 class _ArrowFileReadMixin:
@@ -278,7 +274,6 @@ class _ArrowFileReadMixin:
     the read itself is the same partition-per-file scan."""
 
     columns: list | None
-    arrow: bool
     change_type: str | None = None  # set by CDF batch reads: adds _change_type
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -289,103 +284,14 @@ class _ArrowFileReadMixin:
         if isinstance(partition, _DiffPartition):
             yield from self._read_diff(partition)
             return
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        v = partition.version
-        ct = self.change_type
-        proj = getattr(partition, "proj", None)
-        if proj is not None:
-            # id-mapped EVOLVED read: project the file's physical columns
-            # to the live schema — rename by id, widen by cast, NULL where
-            # the column didn't exist yet — executor-side, in Arrow
-            if not self.arrow:
-                raise ValueError(
-                    "snaplog: the legacy arrow=false row path does not "
-                    "support evolved (id-mapped) files"
-                )
-            import pyarrow.compute as pc
-
-            want = [
-                (ln, pn, t)
-                for ln, pn, t in proj
-                if self.columns is None or ln in self.columns
-            ]
-            phys = [pn for _ln, pn, _t in want if pn is not None]
-            pf = pq.ParquetFile(partition.path)
-            for batch in pf.iter_batches(columns=phys or None):
-                arrays, names = [], []
-                for ln, pn, t in want:
-                    at = _evolved_arrow_type(t)
-                    if pn is None:
-                        arr = pa.nulls(batch.num_rows, type=at)
-                    else:
-                        arr = batch.column(batch.schema.get_field_index(pn))
-                        if arr.type != at:
-                            arr = pc.cast(arr, at)
-                    arrays.append(arr)
-                    names.append(ln)
-                out = pa.RecordBatch.from_arrays(arrays, names=names)
-                if ct is not None:
-                    out = out.append_column(
-                        "_change_type",
-                        pa.array([ct] * out.num_rows, type=pa.string()),
-                    )
-                yield out.append_column(
-                    "_commit_version",
-                    pa.array([v] * out.num_rows, type=pa.int64()),
-                )
-            return
-        if self.arrow:
-            pf = pq.ParquetFile(partition.path)
-            for batch in pf.iter_batches(columns=self.columns):
-                if ct is not None:
-                    batch = batch.append_column(
-                        "_change_type",
-                        pa.array([ct] * batch.num_rows, type=pa.string()),
-                    )
-                yield batch.append_column(
-                    "_commit_version",
-                    pa.array([v] * batch.num_rows, type=pa.int64()),
-                )
-            return
-        # legacy row-tuple path — the measured-negative A/B arm only
-        tbl = pq.read_table(partition.path, columns=self.columns)
-        cols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
-        tail = (v,) if ct is None else (ct, v)
-        for i in range(tbl.num_rows):
-            yield tuple(c[i] for c in cols) + tail
-
-    def _load_projected(self, path: str, proj):
-        """One file -> pyarrow Table in the LIVE column space: id-mapped
-        rename/widen/NULL-backfill when ``proj`` is set (same semantics as
-        the batch path above, applied table-at-once), plain column-pruned
-        read otherwise."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if proj is None:
-            return pq.read_table(path, columns=self.columns)
-        import pyarrow.compute as pc
-
-        want = [
-            (ln, pn, t)
-            for ln, pn, t in proj
-            if self.columns is None or ln in self.columns
-        ]
-        tbl = pq.read_table(path, columns=[pn for _l, pn, _t in want if pn])
-        arrays, names = [], []
-        for ln, pn, t in want:
-            at = _evolved_arrow_type(t)
-            if pn is None:
-                arr = pa.nulls(tbl.num_rows, type=at)
-            else:
-                arr = tbl.column(pn)
-                if arr.type != at:
-                    arr = pc.cast(arr, at)
-            arrays.append(arr)
-            names.append(ln)
-        return pa.Table.from_arrays(arrays, names=names)
+        proj = partition.proj
+        pf = pq.ParquetFile(partition.path)
+        for batch in pf.iter_batches(columns=_physical_columns(proj, self.columns)):
+            yield _stamp(
+                _to_live(batch, proj, self.columns), self.change_type, partition.version
+            )
 
     def _read_diff(self, partition: "_DiffPartition") -> Iterator:
         """Executor-side row-level diff of ONE rewrite version (round 13,
@@ -403,6 +309,7 @@ class _ArrowFileReadMixin:
         Bounded by the planner's ``maxDiffBytes`` refusal, so the
         in-memory Counter here is over the touched slice only."""
         import pyarrow as pa
+        import pyarrow.parquet as pq
 
         def hashable(v):
             # NaN != NaN would make every float-NaN row a spurious
@@ -416,7 +323,14 @@ class _ArrowFileReadMixin:
             return v
 
         def load(pairs, schema_like=None):
-            tabs = [self._load_projected(p, proj) for p, proj in pairs]
+            tabs = [
+                _to_live(
+                    pq.read_table(p, columns=_physical_columns(proj, self.columns)),
+                    proj,
+                    self.columns,
+                )
+                for p, proj in pairs
+            ]
             if tabs:
                 return pa.concat_tables(tabs)
             return schema_like.schema.empty_table()
@@ -492,15 +406,7 @@ class _ArrowFileReadMixin:
         for tbl, idx, ct in emit:
             if not idx:
                 continue
-            out = tbl.take(idx)
-            out = out.append_column(
-                "_change_type", pa.array([ct] * out.num_rows, type=pa.string())
-            )
-            out = out.append_column(
-                "_commit_version", pa.array([v] * out.num_rows, type=pa.int64())
-            )
-            for batch in out.to_batches():
-                yield batch
+            yield from _stamp(tbl.take(idx), ct, v).to_batches()
 
 
 class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
@@ -508,24 +414,14 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         common = _parse_common_options(options)
         self.root = common["root"]
         self.columns = common["columns"]
-        self.arrow = common["arrow"]
-        self.ignore_changes = (
-            str(options.get("ignorechanges", "false")).lower() == "true"
-        )
+        self.ignore_changes = _flag(options, "ignorechanges")
         # Delta's third knob: admit commits that ONLY remove files (the
         # retention/partition-delete shape — nothing to re-emit), while
         # rewrites (remove AND add) still require ignoreChanges.
         # ignoreChanges implies ignoreDeletes, as in Delta.
-        self.ignore_deletes = self.ignore_changes or (
-            str(options.get("ignoredeletes", "false")).lower() == "true"
-        )
-        self.skip_change_commits = (
-            str(options.get("skipchangecommits", "false")).lower() == "true"
-        )
-        if self.skip_change_commits and (
-            self.ignore_changes
-            or str(options.get("ignoredeletes", "false")).lower() == "true"
-        ):
+        self.ignore_deletes = self.ignore_changes or _flag(options, "ignoredeletes")
+        self.skip_change_commits = _flag(options, "skipchangecommits")
+        if self.skip_change_commits and self.ignore_deletes:
             raise ValueError(
                 "snaplog source: skipChangeCommits is mutually exclusive "
                 "with ignoreChanges/ignoreDeletes — pick one change-commit "
@@ -557,12 +453,10 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         # loudly and a restart picks up the new schema — Delta's
         # non-additive-change restart rule, unchanged.  Default (option
         # absent) keeps the loud refusal.
-        self.schema_tracking = (
-            str(options.get("schematracking", "false")).lower() == "true"
-        )
+        self.schema_tracking = _flag(options, "schematracking")
         self._declared_cols = None
         if self.schema_tracking:
-            view0 = _LogView(self.root)
+            view0 = LogView(self.root)
             if view0.published:
                 self._declared_cols = view0.entries[view0.published[-1]].get(
                     "columns"
@@ -577,7 +471,7 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         # of bare rows — for this append-shaped source every admitted file
         # is an 'insert' (the mixin stamps it), which is exactly what the
         # retract/apply IVM consumers take as input without a withColumn
-        if str(options.get("readchangefeed", "false")).lower() == "true":
+        if _flag(options, "readchangefeed"):
             self.change_type = "insert"
 
         def _cap(key: str) -> int | None:
@@ -604,7 +498,7 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         if self.starting_ts is not None:
-            view = _LogView(self.root)
+            view = LogView(self.root)
             ts = float(self.starting_ts)
             # first version committed AT OR AFTER the timestamp; none yet
             # -> subscribe from the head (future commits only)
@@ -614,7 +508,7 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
                     off = v
                     break
         elif self.starting == "latest":
-            off = _LogView(self.root).head_offset
+            off = LogView(self.root).head_offset
         else:
             off = int(self.starting)
         if self._cursor is None:
@@ -622,7 +516,7 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         return {"next_version": off}
 
     def latestOffset(self) -> dict:
-        view = _LogView(self.root)
+        view = LogView(self.root)
         head = view.head_offset
         if self.max_files is None and self.max_bytes is None:
             self._cursor = head
@@ -662,7 +556,7 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         # pacing frontier at least at the end of the batch being planned
         if self._cursor is None or hi > self._cursor:
             self._cursor = hi
-        view = _LogView(self.root)
+        view = LogView(self.root)
         out: list[InputPartition] = []
         for v in view.published:
             if not lo <= v < hi:
@@ -704,51 +598,36 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
                         "rewritten rows may re-emit) or .option("
                         "'skipChangeCommits', 'true') to skip the version"
                     )
-            if self.schema_tracking:
-                # opt-in evolved streaming: every file id-maps to the
-                # schema declared at stream start — but if the table
-                # evolved PAST that schema mid-stream, emitting would
-                # produce wrong columns; fail loudly, restart re-declares
-                head_cols = view.entries[view.published[-1]].get("columns")
-                if head_cols != self._declared_cols:
-                    raise ValueError(
-                        "snaplog stream: table schema evolved mid-stream "
-                        "(live columns differ from the schema this stream "
-                        "declared at start) — restart the stream to pick "
-                        "up the evolved schema"
-                    )
-                for f in added:
-                    out.append(
-                        _FilePartition(
-                            f["path"],
-                            v,
-                            proj=view.file_projection(f, self._declared_cols),
-                        )
-                    )
-                continue
+            # EVOLVING logs: a file written under an OLDER schema generation
+            # cannot stream through a fixed-schema source — the Delta rule
+            # (streams fail on non-additive schema change).  The id-mapped
+            # BATCH reader handles it; the stream refuses loudly instead of
+            # emitting wrong columns, unless schemaTracking opted in to
+            # id-mapping every file to the schema declared at stream start
+            head_cols = view.entries[view.head()].get("columns")
+            if self.schema_tracking and head_cols != self._declared_cols:
+                # the table evolved PAST the declared schema mid-stream:
+                # emitting would produce wrong columns; restart re-declares
+                raise ValueError(
+                    "snaplog stream: table schema evolved mid-stream "
+                    "(live columns differ from the schema this stream "
+                    "declared at start) — restart the stream to pick "
+                    "up the evolved schema"
+                )
             for f in added:
-                # EVOLVING logs: a file written under an OLDER schema
-                # generation cannot stream through a fixed-schema source —
-                # the Delta rule (streams fail on non-additive schema
-                # change).  The id-mapped BATCH reader handles it; the
-                # stream refuses loudly instead of emitting wrong columns
-                # (opt in with .option('schemaTracking', 'true') above).
-                sv = f.get("schema_v")
-                if sv is not None:
-                    written = view.entries.get(sv, {}).get("columns")
-                    head_cols = view.entries[view.published[-1]].get("columns")
-                    if written is not None and written != head_cols:
-                        raise ValueError(
-                            f"snaplog stream: version {v} adds files written "
-                            f"under schema generation v{sv}, which differs "
-                            "from the live schema — evolved history is "
-                            "batch-readable via the id mapping (spark.read."
-                            "format('snaplog')), or opt in to id-mapped "
-                            "streaming with .option('schemaTracking', "
-                            "'true'); restart the stream to pick up the "
-                            "evolved schema"
-                        )
-                out.append(_FilePartition(f["path"], v))
+                proj = view.file_projection(f, head_cols)
+                if proj is not None and not self.schema_tracking:
+                    raise ValueError(
+                        f"snaplog stream: version {v} adds files written "
+                        f"under schema generation v{f['schema_v']}, which "
+                        "differs from the live schema — evolved history is "
+                        "batch-readable via the id mapping (spark.read."
+                        "format('snaplog')), or opt in to id-mapped "
+                        "streaming with .option('schemaTracking', "
+                        "'true'); restart the stream to pick up the "
+                        "evolved schema"
+                    )
+                out.append(_FilePartition(f["path"], v, proj))
         return out
 
     def commit(self, end: dict) -> None:
@@ -784,15 +663,9 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
         common = _parse_common_options(options)
         self.root = common["root"]
         self.columns = common["columns"]
-        self.arrow = common["arrow"]
         self.version_as_of = options.get("versionasof")
         self.timestamp_as_of = options.get("timestampasof")
-        if self.version_as_of is not None and self.timestamp_as_of is not None:
-            raise ValueError(
-                "snaplog source: versionAsOf and timestampAsOf are mutually "
-                "exclusive"
-            )
-        self.cdf = str(options.get("readchangefeed", "false")).lower() == "true"
+        self.cdf = _flag(options, "readchangefeed")
         if self.cdf:
             if self.version_as_of is not None or self.timestamp_as_of is not None:
                 raise ValueError(
@@ -819,28 +692,11 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
                 options.get("maxdiffbytes", 256 * 1024 * 1024)
             )
 
-    def _resolve_version(self, view: _LogView) -> int:
-        if self.version_as_of is not None:
-            v = int(self.version_as_of)
-            if v not in view.entries:
-                raise ValueError(f"snaplog: no version {v} under {self.root}")
-            if view.kind(v) == "staged":
-                raise ValueError(
-                    f"snaplog: version {v} is staged (write-audit-publish) — "
-                    "not consumer-visible; publish it first"
-                )
-            return v
-        if self.timestamp_as_of is not None:
-            return _log(self.root).version_as_of_ts(float(self.timestamp_as_of))
-        if not view.published:
-            raise ValueError(f"no published versions under {self.root}")
-        return view.published[-1]
-
     def partitions(self) -> Sequence[InputPartition]:
-        view = _LogView(self.root)
+        view = LogView(self.root)
         if self.cdf:
             return self._cdf_partitions(view)
-        v = self._resolve_version(view)
+        v = view.resolve(self.version_as_of, self.timestamp_as_of)
         # first-published version per file, from the one forward pass
         added_in: dict[str, int] = {}
         for pv in view.published:
@@ -864,12 +720,8 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
             for f in entry["files"]
         ]
 
-    def _cdf_partitions(self, view: _LogView) -> Sequence[InputPartition]:
-        end = self.cdf_end
-        if end is None:
-            if not view.published:
-                raise ValueError(f"no published versions under {self.root}")
-            end = view.published[-1]
+    def _cdf_partitions(self, view: LogView) -> Sequence[InputPartition]:
+        end = view.head() if self.cdf_end is None else self.cdf_end
         if end not in view.entries:
             raise ValueError(
                 f"snaplog readChangeFeed: endingVersion {end} does not "
@@ -1029,10 +881,6 @@ class _SnapLogStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int) -> None:
         import contextlib
 
-        from experiments_datafusion_spark.operators.table_format import (
-            SnapshotLog,
-        )
-
         files = [
             {"path": m.path, "size": m.size}
             for m in messages
@@ -1040,29 +888,19 @@ class _SnapLogStreamWriter(DataSourceStreamArrowWriter):
         ]
         if not files:
             return  # an all-empty micro-batch commits nothing (Delta too)
-        log = SnapshotLog(self.root)
-        tip = log.latest_version()
-        if tip >= 0 and "columns" in log.entry(tip):
-            # an EvolvingLog table: sink commits don't stamp column ids /
-            # per-file schema_v, so they would silently break the id-mapped
-            # reader — refuse loudly instead (append through
-            # EvolvingLog.append_columns for id-schema tables)
-            raise ValueError(
-                "snaplog sink: target log carries an id-mapped (evolving) "
-                "schema; the sink only writes plain snapshot logs"
-            )
 
         def drop_orphans() -> None:
             for f in files:
                 with contextlib.suppress(FileNotFoundError):
                     os.remove(f["path"])
 
-        log.commit_append_files(
-            files,
+        _sink_commit(
+            self.root,
+            self.app_id,
+            batchId,
             self.schema_list,
-            note=f"{self.app_id} batch {batchId}",
-            txn=(self.app_id, int(batchId)),
-            on_replay=drop_orphans,
+            lambda _log: files,
+            drop_orphans,
         )
 
     def abort(self, messages, batchId: int) -> None:
@@ -1072,6 +910,35 @@ class _SnapLogStreamWriter(DataSourceStreamArrowWriter):
             if m is not None and getattr(m, "path", None):
                 with contextlib.suppress(FileNotFoundError):
                     os.remove(m.path)
+
+
+def _sink_commit(root: str, app_id: str, batch_id: int, schema, write, on_replay):
+    """The one commit of both snaplog sinks: refuse an id-mapped
+    (evolving) target, land the micro-batch's files through
+    ``write(log)`` (returning their manifest dicts; none = an all-empty
+    batch, which commits nothing), and publish them as ONE append carrying
+    the batch's SetTransaction ``(app_id, batch_id)`` — a replayed batch
+    publishes nothing and calls ``on_replay`` to drop its files."""
+    log = SnapshotLog(root)
+    tip = log.latest_version()
+    if tip >= 0 and "columns" in log.entry(tip):
+        # sink commits don't stamp column ids / per-file schema_v, so they
+        # would silently break the id-mapped reader — refuse loudly
+        # instead (append through EvolvingLog.append_columns)
+        raise ValueError(
+            "snaplog sink: target log carries an id-mapped (evolving) "
+            "schema; the sink only writes plain snapshot logs"
+        )
+    files = write(log)
+    if not files:
+        return
+    log.commit_append_files(
+        files,
+        schema,
+        note=f"{app_id} batch {batch_id}",
+        txn=(app_id, int(batch_id)),
+        on_replay=on_replay,
+    )
 
 
 def register_snaplog_sql(
@@ -1099,27 +966,8 @@ def register_snaplog_sql(
     HISTORY analog: one row per log version (version, kind, note,
     ts, n_files, is_published) from catalog metadata only, no data read.
     """
-    view = _LogView(root)
-    if version_as_of is not None and timestamp_as_of is not None:
-        raise ValueError(
-            "register_snaplog_sql: version_as_of and timestamp_as_of are "
-            "mutually exclusive"
-        )
-    if timestamp_as_of is not None:
-        v = _log(root).version_as_of_ts(float(timestamp_as_of))
-    elif version_as_of is not None:
-        v = int(version_as_of)
-        if v not in view.entries:
-            raise ValueError(f"snaplog: no version {v} under {root}")
-        if view.kind(v) == "staged":
-            raise ValueError(
-                f"snaplog: version {v} is staged (write-audit-publish) — "
-                "not consumer-visible; publish it first"
-            )
-    else:
-        if not view.published:
-            raise ValueError(f"no published versions under {root}")
-        v = view.published[-1]
+    view = LogView(root)
+    v = view.resolve(version_as_of, timestamp_as_of)
     (
         spark.read.format("snaplog")
         .option("path", root)
@@ -1165,11 +1013,8 @@ def register_snaplog_changes_sql(
     contents never shift under a later commit); rewrite-bearing ranges
     resolve through the bounded diff fallback, with ``cdf_key`` naming
     the row key for update pre/post image pairing."""
-    view = _LogView(root)
     if ending_version is None:
-        if not view.published:
-            raise ValueError(f"no published versions under {root}")
-        ending_version = view.published[-1]
+        ending_version = LogView(root).head()
     reader = (
         spark.read.format("snaplog")
         .option("path", root)
@@ -1224,40 +1069,18 @@ def snaplog_fast_sink(root: str, app_id: str):
         import shutil
         import uuid
 
-        from experiments_datafusion_spark.operators.table_format import (
-            SnapshotLog,
-        )
+        task_dir = os.path.join("ws", f"fb-{uuid.uuid4().hex}")
 
-        log = SnapshotLog(root)
-        tip = log.latest_version()
-        if tip >= 0 and "columns" in log.entry(tip):
-            raise ValueError(
-                "snaplog sink: target log carries an id-mapped (evolving) "
-                "schema; the sink only writes plain snapshot logs"
-            )
-        task_dir = os.path.join(root, "ws", f"fb-{uuid.uuid4().hex}")
-        batch_df.write.mode("error").parquet(task_dir)  # the JVM write job
-        files = [
-            {"path": p, "size": os.path.getsize(p)}
-            for p in sorted(
-                os.path.join(task_dir, f)
-                for f in os.listdir(task_dir)
-                if f.endswith(".parquet")
-            )
-        ]
-        if not files:
-            shutil.rmtree(task_dir, ignore_errors=True)
-            return  # an all-empty micro-batch commits nothing (Delta too)
-        log.commit_append_files(
-            files,
-            [
-                [f.name, f.dataType.simpleString(), f.nullable]
-                for f in batch_df.schema.fields
-            ],
-            note=f"{app_id} batch {batch_id}",
-            txn=(app_id, int(batch_id)),
-            on_replay=lambda: shutil.rmtree(task_dir, ignore_errors=True),
-        )
+        def drop() -> None:
+            shutil.rmtree(os.path.join(root, task_dir), ignore_errors=True)
+
+        def write(log: SnapshotLog) -> list[dict]:
+            files = log._write_files(batch_df, task_dir)  # the JVM write job
+            if not files:
+                drop()
+            return files
+
+        _sink_commit(root, app_id, batch_id, _entry_schema(batch_df), write, drop)
 
     return ingest
 
@@ -1276,29 +1099,27 @@ class SnapshotLogDataSource(DataSource):
         return "snaplog"
 
     def schema(self) -> str:
-        root = self.options.get("path")
-        if not root:
-            raise ValueError("snaplog source needs .option('path', <log root>)")
-        view = _LogView(root)
-        # schema of the version a BATCH read would resolve (streaming
-        # appends never change the schema, so the published head's schema
-        # serves both modes; versionAsOf must surface ITS schema — an
-        # old snapshot may predate an evolution)
-        v_opt = self.options.get("versionasof")
-        cdf = str(self.options.get("readchangefeed", "false")).lower() == "true"
-        end_opt = self.options.get("endingversion") if cdf else None
-        if v_opt is not None and int(v_opt) in view.entries:
-            entry = view.entries[int(v_opt)]
+        common = _parse_common_options(self.options)
+        view = LogView(common["root"])
+        # schema of the version a BATCH read resolves (streaming appends
+        # never change the schema, so the published head's serves both
+        # modes; an as-of read must surface ITS version's schema — an old
+        # snapshot may predate an evolution)
+        cdf = _flag(self.options, "readchangefeed")
+        end_opt = self.options.get("endingversion")
+        if not cdf:
+            v = view.resolve(
+                self.options.get("versionasof"), self.options.get("timestampasof")
+            )
         elif end_opt is not None and int(end_opt) in view.entries:
             # CDF reads project files to entries[endingVersion]'s columns
             # (_cdf_partitions), so the declared DDL must resolve from the
             # SAME entry — the published head may have evolved past the
             # range's end (round 13, ADVICE r12 #4)
-            entry = view.entries[int(end_opt)]
+            v = int(end_opt)
         else:
-            if not view.published:
-                raise ValueError(f"no published versions under {root}")
-            entry = view.entries[view.published[-1]]
+            v = view.head()
+        entry = view.entries[v]
         if "columns" in entry:
             # EvolvingLog: the id-carrying live column list IS the schema
             # (an evolve() entry has no physical "schema" — it rewrote no
@@ -1307,19 +1128,18 @@ class SnapshotLogDataSource(DataSource):
             cols = [(name, typ, True) for _i, name, typ in entry["columns"]]
         else:
             cols = entry["schema"]
-        want = (self.options.get("columns") or "").strip()
-        if want:
-            keep = [c.strip() for c in want.split(",") if c.strip()]
-            by_name = {name: (name, typ) for name, typ, _n in cols}
+        keep = common["columns"]
+        if keep:
+            by_name = {name: typ for name, typ, _n in cols}
             missing = [c for c in keep if c not in by_name]
             if missing:
                 raise ValueError(
                     f"snaplog source: columns {missing} not in table schema "
-                    f"{[name for name, _t, _n in cols]}"
+                    f"{list(by_name)}"
                 )
-            cols = [(name, by_name[name][1], True) for name in keep]
+            cols = [(name, by_name[name], True) for name in keep]
         ddl = ", ".join(f"{name} {typ}" for name, typ, _n in cols)
-        if str(self.options.get("readchangefeed", "false")).lower() == "true":
+        if cdf:
             ddl += ", _change_type string"  # the Delta CDF row shape
         return ddl + ", _commit_version bigint"
 

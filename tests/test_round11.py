@@ -615,26 +615,6 @@ def test_snaplog_source_column_pruning(spark, tmp_path):
         )
 
 
-def test_snaplog_source_arrow_and_row_paths_agree(spark, tmp_path):
-    """The legacy row-tuple arm (arrow=false) is kept only for the A/B
-    measurement; both paths must emit identical data."""
-    root = str(tmp_path / "t")
-    log = SnapshotLog(root)
-    log.commit_append(
-        spark.range(50).select("id", (F.col("id") % 7).alias("g"))
-    )
-    log.commit_append(
-        spark.range(50, 80).select("id", (F.col("id") % 7).alias("g"))
-    )
-    _drain_snaplog(spark, root, str(tmp_path / "a"), str(tmp_path / "chka"))
-    _drain_snaplog(
-        spark, root, str(tmp_path / "b"), str(tmp_path / "chkb"), arrow="false"
-    )
-    a = sorted(map(tuple, spark.read.parquet(str(tmp_path / "a")).collect()))
-    b = sorted(map(tuple, spark.read.parquet(str(tmp_path / "b")).collect()))
-    assert a == b
-
-
 # ---- streaming-dedup band-state compaction (the deferred LSM merge) -----------------
 
 

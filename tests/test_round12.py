@@ -939,6 +939,27 @@ def test_snaplog_batch_reads_evolved_log_through_id_mapping(spark, tmp_path):
     ]
 
 
+def test_snaplog_batch_timestamp_as_of_reads_resolved_version_schema(spark, tmp_path):
+    """timestampAsOf resolves through the same view as versionAsOf: a
+    timestamp landing on v0 of an evolved log declares and reads v0's
+    columns and rows, not the published head's schema."""
+    _register(spark)
+    root = str(tmp_path / "t")
+    log = _evolved_log(spark, root)
+    for v in log.versions():
+        log.stamp_ts(v, 10.0 * (v + 1))
+    got = (
+        spark.read.format("snaplog")
+        .option("path", root)
+        .option("timestampAsOf", "15.0")
+        .load()
+    )
+    assert got.columns == ["k", "status", "price_c", "_commit_version"]
+    assert sorted(
+        (r.k, r.status, r.price_c, r._commit_version) for r in got.collect()
+    ) == [(1, "A", 10, 0), (2, "B", 20, 0)]
+
+
 def test_snaplog_stream_refuses_old_generation_files(spark, tmp_path):
     """Streaming a log whose range includes files written under an OLDER
     schema generation must fail loudly (the Delta schema-change rule) —

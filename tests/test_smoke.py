@@ -92,3 +92,20 @@ def test_bench_headline_keys_valid():
         assert q[k].oracle is not None, f"{k}: excluded but has no oracle anyway"
     assert tuple(R4_COMPARABLE) == _R4_ANCHOR
     assert not (set(BENCH_ORACLE_EXCLUDE) & set(R4_COMPARABLE))
+
+
+def test_shipped_package_archive_lives_under_sparkfiles_root(spark):
+    """The package archive ``addPyFile`` ships must sit under the context's
+    SparkFiles root, which Spark deletes on ``stop()`` — an archive in a
+    private temp dir elsewhere outlives every session that made one."""
+    import os
+    from urllib.parse import urlparse
+
+    from pyspark import SparkFiles
+
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    shipped = [f for f in spark.sparkContext.listFiles if f.endswith("/edfs_pkg.zip")]
+    assert shipped
+    for uri in shipped:
+        path = os.path.realpath(urlparse(uri).path)
+        assert os.path.commonpath([root, path]) == root, (uri, root)
